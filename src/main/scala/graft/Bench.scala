@@ -5,6 +5,9 @@ object Bench {
     // Locale.ROOT: a comma-decimal default locale must not break the JSON
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
+  private def jmap(m: Seq[(String, Double)]): String =
+    m.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+
   /** The bounded LAST-printed summary line. The driver captures only
     * the tail ~2000 chars of the log, so this line must fit WHOLE or
     * its head (with `"metric"`) is truncated off and the driver's JSON
@@ -21,8 +24,6 @@ object Bench {
   private[graft] def compactLine(scalars: Seq[(String, String)],
       setup: Seq[(String, Double)], slowest: Seq[(String, Double)],
       warm: Seq[(String, Double)], calib: Seq[(String, Double)]): String = {
-    def jmap(m: Seq[(String, Double)]): String =
-      m.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val fields =
       scalars.map { case (k, v) => "\"" + k + "\":" + v } ++ Seq(
         s""""setup":${jmap(setup.filter(_._2 >= 1.0).sortBy(-_._2).take(6))}""",
@@ -226,7 +227,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.Session.cores()
     // Optional arg: comma-separated query subset (local iteration only —
     // the driver always runs the full set with no args).
     val only: Set[String] = if (args.nonEmpty) args(0).split(",").toSet else Set.empty
@@ -273,7 +274,7 @@ object Bench {
           if (java.nio.file.Files.exists(marker))
             Some(java.nio.file.Files.readString(marker).trim)
           else None
-        val invalidate = prev.exists(_ != cpus)
+        val invalidate = prev.exists(_ != cpus.toString)
         if (invalidate) {
           val kinds = Seq("dedup-index", "postings-index", "phash-index",
             "semantic-cells", "ann-centroids", "ann-centroids-staging",
@@ -288,34 +289,14 @@ object Bench {
             "stores invalidated for a first-touch-comparable scaling run")
         }
         java.nio.file.Files.createDirectories(marker.getParent)
-        java.nio.file.Files.writeString(marker, cpus)
+        java.nio.file.Files.writeString(marker, cpus.toString)
         invalidate
       } catch { case e: Throwable =>
         System.err.println(s"[bench] store-cpus marker failed: ${e.getMessage}")
         false
       }
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Let AQE size post-shuffle partitions by BYTES (the documented
-      // recommendation; default true only to avoid surprising legacy
-      // jobs): with parallelism-first, every 2–4-stage mid-tail query
-      // schedules `cpus` near-empty reduce tasks per exchange and the
-      // suite pays task latency ~200 faces × several stages deep. The
-      // advisory size (default 64 MB) is scale-adaptive — at 100 TB the
-      // same setting fans out by data volume. Guide §2.2 / VERDICT r17
-      // #1; A/B'd suite-wide before keeping.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR: the two intentionally-global windows (qIslands over ~2.4k
-    // post-agg day rows; qIslandsScalable's per-year offset table) trip
-    // WindowExec's blanket single-partition WARN dozens of times per run,
-    // burying real signal in the captured bench tail. Failures still print
-    // via the [bench] stderr lines + failed count + non-zero exit.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local(cpus)
     // Sample the load average BEFORE any Spark work: the bar is "was
     // the machine idle when the bench started" (judge r6/r7/r8 notes),
     // and sampling at report time measured the bench's own 32-thread
@@ -508,8 +489,6 @@ object Bench {
     val warm = warmSet.map { name =>
       name -> time(name, SparkEntry.queries(name), warmFailed ::= _)
     }
-    def jmap(m: Seq[(String, Double)]): String =
-      m.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val qs = jmap(results)
     val total = ok0.map(_._2).sum
     // SELF-ADJUDICATING clean total (judge r15 #1/#4): the r15 artifact

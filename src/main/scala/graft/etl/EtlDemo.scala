@@ -2,8 +2,6 @@ package graft.etl
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.SparkSession
-
 /** Drive the full shift-ETL pipeline end to end from the CLI:
   * paginated source → normalize → atomic batch commits → KPIs.
   *
@@ -14,13 +12,7 @@ object EtlDemo {
     val whDir = args.lift(0).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-etl-demo").toString)
     val asOf = LocalDate.parse(args.lift(1).getOrElse("2023-12-31"))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local()
 
     // Two-page paginated source with a relative next link, as served by the
     // reference API (api/app/main.py:94-104).

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import scala.collection.concurrent.TrieMap
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration.Duration
 
 /** Managed lifecycle for per-corpus staged frames.
   *
@@ -29,25 +31,43 @@ import scala.collection.concurrent.TrieMap
   */
 object Staging {
 
-  private final case class Entry(df: DataFrame, persisted: Boolean)
+  /** A staged frame, completed once its one build finishes. */
+  private final class Entry(val persisted: Boolean) { val df = Promise[DataFrame]() }
 
-  private val entries = TrieMap.empty[(SparkSession, String, String), Entry]
+  private type Key = (SparkSession, String, String)
+  private val entries = TrieMap.empty[Key, Entry]
 
   /** Build-or-reuse a persisted (MEMORY_AND_DISK) staged frame. */
   def persisted(spark: SparkSession, corpus: String, name: String)(
-      build: => DataFrame): DataFrame = {
-    sweepClosed()
-    entries.getOrElseUpdate((spark, corpus, name),
-      Entry(build.persist(StorageLevel.MEMORY_AND_DISK), persisted = true)).df
-  }
+      build: => DataFrame): DataFrame =
+    stage((spark, corpus, name), persisted = true)(
+      build.persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Build-or-reuse a memoized derived frame (caller controls its
     * materialization — e.g. localCheckpoint inside `build`). */
   def memoized(spark: SparkSession, corpus: String, name: String)(
-      build: => DataFrame): DataFrame = {
+      build: => DataFrame): DataFrame =
+    stage((spark, corpus, name), persisted = false)(build)
+
+  /** Single-flight per key: the first caller to register the key runs
+    * `build` and the others wait for its result (`getOrElseUpdate` ran
+    * the build before its atomic insert, so two threads missing on one
+    * key both built it). A failed build is dropped, so the next call
+    * retries. */
+  private def stage(k: Key, persisted: Boolean)(build: => DataFrame): DataFrame = {
     sweepClosed()
-    entries.getOrElseUpdate((spark, corpus, name),
-      Entry(build, persisted = false)).df
+    val mine = new Entry(persisted)
+    entries.putIfAbsent(k, mine) match {
+      case Some(e) => Await.result(e.df.future, Duration.Inf)
+      case None =>
+        val df = try build catch { case t: Throwable =>
+          entries.remove(k, mine)
+          mine.df.failure(t)
+          throw t
+        }
+        mine.df.success(df)
+        df
+    }
   }
 
   /** Release staged frames: all corpora, or just one. Persisted entries
@@ -68,10 +88,12 @@ object Staging {
   /** Corpora with live staged entries — spec/ops introspection. */
   def trackedCorpora: Set[String] = entries.keys.map(_._2).toSet
 
-  private def release(k: (SparkSession, String, String)): Unit =
+  private def release(k: Key): Unit =
     entries.remove(k).foreach { e =>
-      if (e.persisted && !e.df.sparkSession.sparkContext.isStopped)
-        e.df.unpersist(blocking = false)
+      e.df.future.value.flatMap(_.toOption).foreach { df =>
+        if (e.persisted && !df.sparkSession.sparkContext.isStopped)
+          df.unpersist(blocking = false)
+      }
     }
 
   /** A stopped session's cache blocks are gone with its executors —

@@ -418,13 +418,7 @@ object Dedup {
     * phase. At 100 TB these are ingest-time table builds amortized over
     * every later query; charging them to whichever query first touches
     * them overstates steady-state latency 2–3× (judge r6 findings 1/3).
-    * Queries still build them on demand when nobody prewarmed. */
-  def prewarmStaging(spark: SparkSession, sfDir: String): Unit = {
-    prewarmStagingTimed(spark, sfDir); ()
-  }
-
-  /** The same prewarm with per-build timings — graft.TimeSetup's
-    * attribution view of the bench's single dedup_staging number.
+    * Queries still build them on demand when nobody prewarmed.
     *
     * The builds run in DEPENDENCY LEVELS, each level's independent
     * builds submitted concurrently (Par.run, opt guide §2.6 — the r17
@@ -432,38 +426,29 @@ object Dedup {
     * L1 the corpus-scan staples (shingles, 8-grams, both SN candidate
     * frames — four independent scans of docsWide), L2 the
     * shingle-derived indexes, L3 the verified pair table (reads the
-    * hashed shingles), L4 the two CC fixpoints over the pairs. Builds
-    * within a level share no staging entries, so the TrieMap
-    * getOrElseUpdate race is moot; per-build times are wall times and
-    * OVERLAP within a level (Σ builds > step wall — attribution, not
-    * accounting).
+    * hashed shingles), L4 the two CC fixpoints over the pairs.
     *
-    * (review r8 note kept: the "ranked3+prefix3" count warms a
-    * Staging.persisted frame, not a plain def.) */
-  def prewarmStagingTimed(spark: SparkSession,
-      sfDir: String): Seq[(String, Double)] = {
-    def t(name: String)(body: => Any): () => (String, Double) = () => {
-      val t0 = System.nanoTime()
-      body
-      name -> (System.nanoTime() - t0) / 1e9
-    }
-    val l1 = graft.operators.Par.run(Seq(
-      t("shingled3") { shingled(spark, sfDir).count() },
-      t("grams8") { corpusGrams(spark, sfDir).count() },
+    * (The prefixIndex count warms a Staging.persisted frame, not a
+    * plain def.) */
+  def prewarmStaging(spark: SparkSession, sfDir: String): Unit = {
+    def level(builds: (() => Any)*): Unit = { graft.operators.Par.run(builds); () }
+    level(
+      () => shingled(spark, sfDir).count(),
+      () => corpusGrams(spark, sfDir).count(),
       // the SN blocker's maintained candidate frames (text + reversed
       // key) — three faces read each; built here so the n·w window join
       // is charged to the index build, not to whichever face runs first
-      t("sn-cand-text") { snCandText(spark, sfDir).count() },
-      t("sn-cand-rev") { snCandRev(spark, sfDir).count() }))
-    val l2 = graft.operators.Par.run(Seq(
-      t("ranked3+prefix3") { prefixIndex(spark, sfDir)._2.count() },
-      t("shingled3h") { shingledHashed(spark, sfDir).count() },
+      () => snCandText(spark, sfDir).count(),
+      () => snCandRev(spark, sfDir).count())
+    level(
+      () => prefixIndex(spark, sfDir)._2.count(),
+      () => shingledHashed(spark, sfDir).count(),
       // the verbatim-run table (r17 memo over the 8-gram self-join):
       // maintained next to the corpus like the pair table; built here
       // so the Σ df² self-join is charged to the index build, not to
       // q_passage_overlap / q_span_dedup on first touch
-      t("span-runs") { corpusSpanRuns(spark, sfDir).count() }))
-    val l3 = Seq(t("neardup-pairs") { nearDupPairs(spark, sfDir).count() }())
+      () => corpusSpanRuns(spark, sfDir).count())
+    nearDupPairs(spark, sfDir).count()
     // the duplicate-cluster fixpoint is the same kind of maintained
     // table as the pair frame (multi-round star-contraction job whose
     // consumers all need the SAME labels) — without the prewarm its
@@ -472,14 +457,9 @@ object Dedup {
     // standing-clusters is the standing-restricted twin (the attach
     // legs' committed label state, judge r16 — a standing artifact
     // that belongs in setup like dup-clusters)
-    val l4 = graft.operators.Par.run(Seq(
-      t("dup-clusters") { duplicateClusters(spark, sfDir).count() },
-      t("standing-clusters") { standingLabels(spark, sfDir).count() }))
-    val byName = (l1 ++ l2 ++ l3 ++ l4).toMap
-    // historical report order, for stable TimeSetup output
-    Seq("shingled3", "ranked3+prefix3", "shingled3h", "neardup-pairs",
-      "grams8", "dup-clusters", "standing-clusters", "sn-cand-text",
-      "sn-cand-rev").map(n => n -> byName(n))
+    level(
+      () => duplicateClusters(spark, sfDir).count(),
+      () => standingLabels(spark, sfDir).count())
   }
 
   /** Candidate pairs from a postings frame. When the frame carries the

@@ -68,4 +68,26 @@ class StagingSpec extends SparkTestBase {
     assert(builds == 2)
     Staging.invalidate()
   }
+
+  test("concurrent misses on one key build once; a failed build is retried") {
+    Staging.invalidate()
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    def build() = { builds.incrementAndGet(); Thread.sleep(300); spark.range(3).toDF("v") }
+    // all four threads miss together: the barrier releases them at once
+    val start = new java.util.concurrent.CyclicBarrier(4)
+    val got = Par.run(Seq.fill(4)(() => {
+      start.await()
+      Staging.memoized(spark, "corpus-z", "labels")(build())
+    }), maxInFlight = 4)
+    assert(builds.get == 1, "only the first caller may run the build")
+    assert(got.forall(_ eq got.head), "every caller gets the one built frame")
+
+    def boom(): org.apache.spark.sql.DataFrame = {
+      builds.incrementAndGet(); throw new IllegalStateException("boom")
+    }
+    intercept[IllegalStateException](Staging.memoized(spark, "corpus-z", "bad")(boom()))
+    Staging.memoized(spark, "corpus-z", "bad")(build())
+    assert(builds.get == 3, "a failed build must not be cached")
+    Staging.invalidate()
+  }
 }
