@@ -249,43 +249,13 @@ object BpeTrainer {
     * training budget (nMerges = 16, batch = 8) is part of the committed
     * artifact's identity — other budgets stay in-memory via [[merges]]. */
   def committedMerges(spark: SparkSession, sfDir: String): DataFrame =
-    graft.operators.Staging.memoized(spark, sfDir, "bpe-merges") {
+    graft.core.StoreLayout.sigCheckedArtifact(spark, sfDir, "bpe-merges",
+        graft.core.Tables.documents(spark, sfDir), CorpusSigSpark) {
       import spark.implicits._
-      val path = mergesPath(sfDir)
-      val sig = graft.core.Tables.documents(spark, sfDir)
-        .agg(expr(CorpusSigSpark)).head().getLong(0)
-      this.synchronized {
-        // headOption, not head(): a marked-but-empty (externally
-        // truncated) sidecar is STALE to be rebuilt, not a hard failure
-        // for every query that reads it; distinct() so a multi-file
-        // sidecar with mixed sigs (partial overwrite) also reads stale
-        val current = java.nio.file.Files.exists(path.resolve("_GRAFT_COMMITTED")) && {
-          val sigs = spark.read.parquet(path.toString)
-            .select($"corpus_sig").distinct().limit(2).collect().toSeq
-          sigs.length == 1 && sigs.head.getLong(0) == sig
-        }
-        if (!current) {
-          // staged OUTSIDE bpe-merges/ so the oracle's glob can never
-          // observe half-written model files, then published through the
-          // shared protocol (which clears stale-mirror residue)
-          java.nio.file.Files.deleteIfExists(path.resolve("_GRAFT_COMMITTED"))
-          val staging = path.getParent
-            .resolveSibling("bpe-merges-staging").resolve(path.getFileName)
-          graft.core.CommitProtocol.deleteRecursively(staging)
-          val ms = trainedMerges(spark, sfDir)
-          val hs = chainHashes(ms)
-          ms.zip(hs).map { case (m, h) => (m.rank, m.left, m.right, h, sig) }
-            .toDF("rank", "lhs", "rhs", "chain", "corpus_sig")
-            .coalesce(1)
-            .write.mode("overwrite").parquet(staging.toString)
-          graft.core.CommitProtocol.publish(staging, Seq(staging -> path)) {
-            java.nio.file.Files.createFile(path.resolve("_GRAFT_COMMITTED")); ()
-          }
-        }
-      }
-      spark.read.parquet(path.toString)
-        .select($"rank", $"lhs", $"rhs", $"chain")
-    }
+      val ms = trainedMerges(spark, sfDir)
+      ms.zip(chainHashes(ms)).map { case (m, h) => (m.rank, m.left, m.right, h) }
+        .toDF("rank", "lhs", "rhs", "chain")
+    }.select("rank", "lhs", "rhs", "chain")
 
   /** The committed merge list back as ordered [[Merge]]s — the encode
     * face reads the ARTIFACT, not the training memo, so what it applies

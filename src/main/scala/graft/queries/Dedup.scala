@@ -1360,42 +1360,12 @@ object Dedup {
   // each delta write is batch-bounded; the faces' composition is the
   // read view a production consumer would get between compactions.
   private[queries] def maintainedIndexRoot(spark: SparkSession,
-      sfDir: String): java.nio.file.Path = {
-    import spark.implicits._
-    val root = graft.core.Scratch.dir("dedup-index", sfDir)
-    // the memoized token keys the BUILD side effect to the Staging
-    // lifecycle: invalidate(sfDir) forces a rebuild with the frames
-    graft.operators.Staging.memoized(spark, sfDir, "dedup-index-built") {
-      // committed-state fast path (the learnedCentroids staleness
-      // discipline): a fresh JVM over the same corpus bytes reuses the
-      // committed index instead of rebuilding it — the signature file
-      // detects an in-place corpus rewrite, and any partial state
-      // (missing markers) rebuilds from scratch. CONTENT-sensitive
-      // signature (review r15, advisor): text length rides next to the
-      // doc id, so a doc-id-preserving regeneration of the corpus (the
-      // fixture-refresh case a count+id-sum signature is blind to)
-      // invalidates the committed index like every other rewrite.
-      val sig = Tables.documents(spark, sfDir)
-        .agg(expr(
-          "sum(cast(length(text) as bigint) + 31L * doc_id) + 1000003L * count(*)"))
-        .head().getLong(0)
-      val sigFile = root.resolve("_GRAFT_SIG")
-      val current =
-        DedupIndex.isCommitted(root) &&
-        DedupIndex.committedDeltaCount(root) == 2 &&
-        java.nio.file.Files.exists(sigFile) &&
-        java.nio.file.Files.readString(sigFile).trim == sig.toString
-      if (current) Seq(root.toString).toDF("root")
-      else buildMaintainedIndex(spark, sfDir, root, sig)
-    }.count()
-    root
-  }
-
-  private def buildMaintainedIndex(spark: SparkSession, sfDir: String,
-      root: java.nio.file.Path, sig: Long): DataFrame = {
-    import spark.implicits._
-    java.nio.file.Files.deleteIfExists(root.resolve("_GRAFT_SIG"))
-    locally {
+      sfDir: String): java.nio.file.Path =
+    // committed-state fast path + content signature: a fresh JVM over
+    // the same corpus bytes reuses the committed index
+    graft.core.StoreLayout.maintainedRoot(spark, sfDir, "dedup-index",
+      Tables.documents(spark, sfDir), graft.core.StoreLayout.DocumentsSig) { root =>
+      import spark.implicits._
       val standingMembers = graft.queries.TextOps.qualityDecimal(spark, sfDir)
         .join(standingLabels(spark, sfDir)
             .select($"v".as("doc_id"), $"lbl".as("cluster_id")),
@@ -1417,11 +1387,6 @@ object Dedup {
       DedupIndex.applyMaintenance(spark, root,
         spark.emptyDataset[(Long, Long)].toDF("doc_a", "doc_b"), qd, tombs)
     }
-    // sig LAST: a crash mid-build leaves no sig, so the next session
-    // rebuilds rather than trusting partial state
-    java.nio.file.Files.writeString(root.resolve("_GRAFT_SIG"), sig.toString)
-    Seq(root.toString).toDF("root")
-  }
 
   /** Bench setup hook: build (and commit) the maintained index once so
     * the one-time parquet writes are itemized setup, not charged to

@@ -3,7 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
+import graft.core.StoreLayout
+import graft.core.StoreLayout.readDir
 
 /** COMMITTED STANDING DEDUP INDEX — the read-modify-WRITE loop the
   * maintenance legs were missing (judge r14 #2): qKeeperIncremental /
@@ -73,113 +75,63 @@ object DedupIndex {
     StructField("new_cluster_id", LongType)))
   private val tombSchema = StructType(Seq(StructField("doc_id", LongType)))
 
-  // disk layout (versioning, markers, delta chains, replay epochs) is
-  // the shared StoreLayout — see its scaladoc for the crash semantics
-  private def marker(dir: Path): Path = StoreLayout.marker(dir)
-
-  /** The current committed base snapshot dir — the HIGHEST base-N with
-    * a marker (unmarked versions are crash residue, invisible). Exposed
-    * for specs and the streaming maintenance sink. */
-  private[graft] def currentBaseDir(root: Path): Option[Path] =
-    StoreLayout.currentBaseDir(root)
-
-  /** True when the root holds at least one committed base. */
-  private[graft] def isCommitted(root: Path): Boolean =
-    StoreLayout.isCommitted(root)
-
-  private def readDir(spark: SparkSession, dir: Path, schema: StructType): DataFrame =
-    StoreLayout.readDir(spark, dir, schema)
+  // disk layout (versioning, markers, delta chains, replay epochs) and
+  // the publish paths are the shared StoreLayout — see its scaladoc for
+  // the crash semantics
 
   /** Publish the full-pass snapshot: members at the keeperMembers grain
-    * (doc_id, cluster_id, qd), into the NEXT base version. The marker
-    * is the commit point — until it exists readers resolve the previous
-    * version with its delta chain intact; after it they resolve the new
-    * one (which has no deltas). Superseded versions are retired after
-    * the marker, so at every instant the newest committed snapshot is
-    * complete and recoverable. The member table is written at the
+    * (doc_id, cluster_id, qd), into the NEXT base version
+    * ([[StoreLayout.publishBase]]). The member table is written at the
     * frame's natural partitioning (NOT coalesce(1) — judge r15 #7: a
     * 100 TB base publish must parallelize; at that scale the publish is
     * a partitioned write and compaction upserts only touched clusters'
     * partitions); the kilobyte-scale seat table stays single-file.
     * `carryEpochs` (compaction paths only) carries the applied replay
     * epochs into the new version so exactly-once survives a mid-stream
-    * compaction (advisor r16 — see [[StoreLayout.stageEpochCarry]]). */
+    * compaction (advisor r16). */
   def writeBase(spark: SparkSession, root: Path, members: DataFrame,
-      carryEpochs: Boolean = false): Unit = {
-    val m = members.select(col("doc_id").cast("long"),
-      col("cluster_id").cast("long"), col("qd").cast(labelSchema(2).dataType))
-    Files.createDirectories(root)
-    val dest = StoreLayout.nextBaseDest(root)
-    val staging = root.getParent.resolve(root.getFileName.toString + "-staging")
-    graft.core.CommitProtocol.deleteRecursively(staging)
-    m.write.parquet(staging.resolve("labels").toString)
-    Dedup.electKeepers(readDir(spark, staging.resolve("labels"), labelSchema))
-      .select(col("cluster_id"), col("doc_id").as("keeper_id"), col("qd"))
-      .coalesce(1).write.parquet(staging.resolve("keepers").toString)
-    if (carryEpochs) StoreLayout.stageEpochCarry(root, staging)
-    graft.core.CommitProtocol.publish(staging, Seq(staging -> dest)) {
-      Files.createFile(marker(dest)); ()
+      carryEpochs: Boolean = false): Unit =
+    StoreLayout.publishBase(root, carryEpochs) { staging =>
+      members.select(col("doc_id").cast("long"),
+          col("cluster_id").cast("long"), col("qd").cast(labelSchema(2).dataType))
+        .write.parquet(staging.resolve("labels").toString)
+      Dedup.electKeepers(readDir(spark, staging.resolve("labels"), labelSchema))
+        .select(col("cluster_id"), col("doc_id").as("keeper_id"), col("qd"))
+        .coalesce(1).write.parquet(staging.resolve("keepers").toString)
     }
-    StoreLayout.retireSuperseded(root, keep = dest)
+
+  /** One delta's composition step: relabel → anti-join tombs → union
+    * adds, over the delta parts under `dir` (committed or staged). */
+  private def applyDelta(spark: SparkSession, view: DataFrame,
+      dir: Path): DataFrame = {
+    val relabel = readDir(spark, dir.resolve("relabel"), relabelSchema)
+    val tombs = readDir(spark, dir.resolve("tombs"), tombSchema)
+    val adds = readDir(spark, dir.resolve("adds"), labelSchema)
+    view
+      .join(relabel, view("cluster_id") === relabel("old_cluster_id"), "left_outer")
+      .select(view("doc_id"),
+        coalesce(relabel("new_cluster_id"), view("cluster_id")).as("cluster_id"),
+        view("qd"))
+      .join(tombs, Seq("doc_id"), "left_anti")
+      .unionByName(adds)
   }
-
-  private def committedDeltas(base: Path): Seq[Path] =
-    StoreLayout.committedDeltas(base)
-
-  /** Length of the current committed delta chain — the compaction-
-    * cadence readout (q_index_health). */
-  private[graft] def committedDeltaCount(root: Path): Int =
-    StoreLayout.committedDeltaCount(root)
-
-  private def requireBase(root: Path): Path =
-    StoreLayout.requireBase(root, "index")
-
-  /** Streaming-replay epochs already folded into the current committed
-    * version ([[applyMaintenance]]'s `epoch`) — compaction carries them
-    * forward. */
-  private[graft] def appliedEpochs(root: Path): Set[Long] =
-    StoreLayout.appliedEpochs(root)
-
-  /** Lineage-cut cadence for delta-chain composition (r15 judge
-    * hygiene note: iterated per-delta joins grow plan depth O(deltas)
-    * between compactions — fine at the shipped chain length, a
-    * planner-time hazard if a chain is left uncompacted). Every
-    * ChainCutEvery deltas the composed view takes a lazy
-    * localCheckpoint, so analysis/optimization cost is bounded by the
-    * cadence whatever the chain length; [[compact]] (and the
-    * q_index_health compact_due flag at 4 deltas) remains the real
-    * fix. Shared by all three committed stores. */
-  private[queries] val ChainCutEvery = 4
 
   /** The composed member view (doc_id, cluster_id, qd) at the current
     * committed version (or after the first `upTo` deltas). */
   def labels(spark: SparkSession, root: Path, upTo: Int = Int.MaxValue): DataFrame = {
-    val base = requireBase(root)
-    var view = readDir(spark, base.resolve("labels"), labelSchema)
-    committedDeltas(base).take(upTo).zipWithIndex.foreach { case (d, i) =>
-      val relabel = readDir(spark, d.resolve("relabel"), relabelSchema)
-      val tombs = readDir(spark, d.resolve("tombs"), tombSchema)
-      val adds = readDir(spark, d.resolve("adds"), labelSchema)
-      view = view
-        .join(relabel, view("cluster_id") === relabel("old_cluster_id"), "left_outer")
-        .select(view("doc_id"),
-          coalesce(relabel("new_cluster_id"), view("cluster_id")).as("cluster_id"),
-          view("qd"))
-        .join(tombs, Seq("doc_id"), "left_anti")
-        .unionByName(adds)
-      if ((i + 1) % ChainCutEvery == 0)
-        view = view.localCheckpoint(eager = false)
-    }
-    view
+    val base = StoreLayout.requireBase(root)
+    StoreLayout.foldDeltas(base,
+      readDir(spark, base.resolve("labels"), labelSchema), upTo)(
+      applyDelta(spark, _, _))
   }
 
   /** The committed keeper table at the current version — materialized
     * at each publish from the composed members by the ONE election rule
     * (Dedup.electKeepers), so seats and members can never drift. */
   def keepers(spark: SparkSession, root: Path): DataFrame = {
-    val base = requireBase(root)
-    val versions = committedDeltas(base)
-    val dir = versions.lastOption.getOrElse(base).resolve("keepers")
+    val base = StoreLayout.requireBase(root)
+    val dir = StoreLayout.committedDeltas(base).lastOption.getOrElse(base)
+      .resolve("keepers")
     spark.read.parquet(dir.toString)
   }
 
@@ -191,98 +143,66 @@ object DedupIndex {
     * @param qd      quality (doc_id, qd) covering every pair endpoint —
     *                the ingest batch's row-local scan at production
     * @param deletes tombstoned doc ids (doc_id) — non-member ids no-op
-    * @param epoch   replay tag for streaming sinks: a batch id recorded
-    *                in the committed delta; an epoch already present in
-    *                the chain makes the call a NO-OP, so Structured
-    *                Streaming's micro-batch replays after a crash fold
-    *                each batch exactly once (the warehouse
-    *                committedBatches discipline)
+    * @param epoch   replay tag for streaming sinks
+    *                ([[StoreLayout.publishDelta]]): an epoch already
+    *                folded makes the call a NO-OP
     */
   def applyMaintenance(spark: SparkSession, root: Path,
       pairs: DataFrame, qd: DataFrame, deletes: DataFrame,
-      epoch: Option[Long] = None): Unit = {
-    import spark.implicits._
-    if (epoch.exists(appliedEpochs(root).contains)) return
-    val base = requireBase(root)
-    val cur = labels(spark, root)
-    val lbl = cur.select($"doc_id", $"cluster_id")
-    // contract endpoints through the committed labels
-    val p = pairs.select($"doc_a", $"doc_b")
-      .join(lbl.select($"doc_id".as("doc_a"), $"cluster_id".as("ca")),
-        Seq("doc_a"), "left_outer")
-      .join(lbl.select($"doc_id".as("doc_b"), $"cluster_id".as("cb")),
-        Seq("doc_b"), "left_outer")
-      .select(coalesce($"ca", $"doc_a").as("ra"),
-        coalesce($"cb", $"doc_b").as("rb"),
-        $"doc_a", $"doc_b")
-    val edges = p.filter($"ra" =!= $"rb").select($"ra", $"rb").distinct()
-    // CC over the contracted graph (batch-bounded): component min IS
-    // the final cluster name, because constituent names are already
-    // their own member minima
-    val mapping = graft.operators.ConnectedComponents.starLabels(edges)
-      .toDF("rep", "new_cluster_id")
-    val existing = cur.select($"cluster_id").distinct()
-    val relabel = mapping
-      .join(existing, mapping("rep") === existing("cluster_id"))
-      .filter($"rep" =!= $"new_cluster_id")
-      .select($"rep".as("old_cluster_id"), $"new_cluster_id")
-    // docs new to the index: pair endpoints not yet members (arrivals
-    // and previously-unclustered standing partners)
-    val endpoints = pairs.select($"doc_a".as("doc_id"))
-      .unionByName(pairs.select($"doc_b".as("doc_id"))).distinct()
-    val adds = endpoints
-      .join(cur.select($"doc_id"), Seq("doc_id"), "left_anti")
-      .join(mapping, $"doc_id" === $"rep")
-      .join(qd.select($"doc_id", $"qd".cast(labelSchema(2).dataType).as("qd")),
-        Seq("doc_id"))
-      .select($"doc_id", $"new_cluster_id".as("cluster_id"), $"qd")
-    val n = committedDeltas(base).size + 1
-    val dest = base.resolve(s"delta=$n")
-    val staging = root.getParent.resolve(s"${root.getFileName}-delta-staging")
-    graft.core.CommitProtocol.deleteRecursively(staging)
-    adds.coalesce(1).write.parquet(staging.resolve("adds").toString)
-    relabel.coalesce(1).write.parquet(staging.resolve("relabel").toString)
-    deletes.select(col(deletes.columns.head).cast("long").as("doc_id"))
-      .coalesce(1).write.parquet(staging.resolve("tombs").toString)
-    // re-elect the seat table of the composed view at this version from
-    // the STAGED bytes (validation against staging, the protocol rule) —
-    // materialized fully here because the member table is dup-rate ≪
-    // corpus; a 100 TB deployment upserts only touched clusters' rows
-    val stagedView = {
-      val relabelS = readDir(spark, staging.resolve("relabel"), relabelSchema)
-      val tombsS = readDir(spark, staging.resolve("tombs"), tombSchema)
-      val addsS = readDir(spark, staging.resolve("adds"), labelSchema)
-      cur.join(relabelS, cur("cluster_id") === relabelS("old_cluster_id"), "left_outer")
-        .select(cur("doc_id"),
-          coalesce(relabelS("new_cluster_id"), cur("cluster_id")).as("cluster_id"),
-          cur("qd"))
-        .join(tombsS, Seq("doc_id"), "left_anti")
-        .unionByName(addsS)
+      epoch: Option[Long] = None): Unit =
+    StoreLayout.publishDelta(root, epoch) { staging =>
+      import spark.implicits._
+      val cur = labels(spark, root)
+      val lbl = cur.select($"doc_id", $"cluster_id")
+      // contract endpoints through the committed labels
+      val p = pairs.select($"doc_a", $"doc_b")
+        .join(lbl.select($"doc_id".as("doc_a"), $"cluster_id".as("ca")),
+          Seq("doc_a"), "left_outer")
+        .join(lbl.select($"doc_id".as("doc_b"), $"cluster_id".as("cb")),
+          Seq("doc_b"), "left_outer")
+        .select(coalesce($"ca", $"doc_a").as("ra"),
+          coalesce($"cb", $"doc_b").as("rb"),
+          $"doc_a", $"doc_b")
+      val edges = p.filter($"ra" =!= $"rb").select($"ra", $"rb").distinct()
+      // CC over the contracted graph (batch-bounded): component min IS
+      // the final cluster name, because constituent names are already
+      // their own member minima
+      val mapping = graft.operators.ConnectedComponents.starLabels(edges)
+        .toDF("rep", "new_cluster_id")
+      val existing = cur.select($"cluster_id").distinct()
+      val relabel = mapping
+        .join(existing, mapping("rep") === existing("cluster_id"))
+        .filter($"rep" =!= $"new_cluster_id")
+        .select($"rep".as("old_cluster_id"), $"new_cluster_id")
+      // docs new to the index: pair endpoints not yet members (arrivals
+      // and previously-unclustered standing partners)
+      val endpoints = pairs.select($"doc_a".as("doc_id"))
+        .unionByName(pairs.select($"doc_b".as("doc_id"))).distinct()
+      val adds = endpoints
+        .join(cur.select($"doc_id"), Seq("doc_id"), "left_anti")
+        .join(mapping, $"doc_id" === $"rep")
+        .join(qd.select($"doc_id", $"qd".cast(labelSchema(2).dataType).as("qd")),
+          Seq("doc_id"))
+        .select($"doc_id", $"new_cluster_id".as("cluster_id"), $"qd")
+      adds.coalesce(1).write.parquet(staging.resolve("adds").toString)
+      relabel.coalesce(1).write.parquet(staging.resolve("relabel").toString)
+      deletes.select(col(deletes.columns.head).cast("long").as("doc_id"))
+        .coalesce(1).write.parquet(staging.resolve("tombs").toString)
+      // re-elect the seat table of the composed view at this version
+      // from the STAGED bytes (validation against staging, the protocol
+      // rule) — materialized fully here because the member table is
+      // dup-rate ≪ corpus; a 100 TB deployment upserts only touched
+      // clusters' rows
+      Dedup.electKeepers(applyDelta(spark, cur, staging))
+        .select(col("cluster_id"), col("doc_id").as("keeper_id"), col("qd"))
+        .coalesce(1).write.parquet(staging.resolve("keepers").toString)
     }
-    Dedup.electKeepers(stagedView)
-      .select(col("cluster_id"), col("doc_id").as("keeper_id"), col("qd"))
-      .coalesce(1).write.parquet(staging.resolve("keepers").toString)
-    StoreLayout.stageEpochTag(staging, epoch)
-    graft.core.CommitProtocol.publish(staging, Seq(staging -> dest)) {
-      Files.createFile(marker(dest)); ()
-    }
-  }
 
-  /** Operational counters for the health face (q_index_health):
-    * (committed delta-chain length, base member rows, Σ delta add rows,
-    * composed live rows). Base/add counts are driver-side parquet
-    * FOOTER reads (no Spark job — [[StoreLayout.footerRowCount]]);
-    * only the composed live count runs a real job, the honest price of
-    * an audit-grade readout. */
+  /** Health counters (q_index_health) on the member grain
+    * ([[StoreLayout.healthCounts]]). */
   private[graft] def healthCounts(spark: SparkSession,
-      root: Path): (Long, Long, Long, Long) = {
-    val base = requireBase(root)
-    val deltas = committedDeltas(base)
-    val nBase = StoreLayout.footerRowCount(spark, base.resolve("labels"))
-    val nAdds = deltas.map(d =>
-      StoreLayout.footerRowCount(spark, d.resolve("adds"))).sum
-    (deltas.size.toLong, nBase, nAdds, labels(spark, root).count())
-  }
+      root: Path): (Long, Long, Long, Long) =
+    StoreLayout.healthCounts(spark, root, "labels", "adds")(labels(spark, root))
 
   /** Fold the delta chain into a new base — the physical erasure of
     * tombstoned rows and the point where cluster names reconcile to

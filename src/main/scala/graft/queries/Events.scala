@@ -889,47 +889,22 @@ object Events {
     * events signature once per (session, corpus); stale or truncated
     * sidecars rebuild (the BpeTrainer.committedMerges discipline). */
   def committedJourneyEdges(spark: SparkSession, sfDir: String): DataFrame =
-    graft.operators.Staging.memoized(spark, sfDir, "journey-model") {
+    graft.core.StoreLayout.sigCheckedArtifact(spark, sfDir, "journey-model",
+        Tables.events(spark, sfDir), EventsSigSpark) {
       import spark.implicits._
-      val path = journeyModelPath(sfDir)
-      val sig = Tables.events(spark, sfDir)
-        .agg(expr(EventsSigSpark)).head().getLong(0)
-      this.synchronized {
-        val current = java.nio.file.Files
-          .exists(path.resolve("_GRAFT_COMMITTED")) && {
-          val sigs = spark.read.parquet(path.toString)
-            .select($"corpus_sig").distinct().limit(2).collect().toSeq
-          sigs.length == 1 && sigs.head.getLong(0) == sig
-        }
-        if (!current) {
-          // staged OUTSIDE journey-model/ so the oracle's glob can never
-          // observe half-written model files
-          java.nio.file.Files.deleteIfExists(path.resolve("_GRAFT_COMMITTED"))
-          val staging = path.getParent
-            .resolveSibling("journey-model-staging").resolve(path.getFileName)
-          graft.core.CommitProtocol.deleteRecursively(staging)
-          val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-          val ev = Tables.events(spark, sfDir)
-            .select($"user_id", $"ts", $"event_id", $"event_type")
-            .select($"event_type",
-              coalesce(lag($"event_type", 1).over(w), lit("^start")).as("src"),
-              lead($"event_type", 1).over(w).isNull.as("is_last"))
-          ev.select($"src", $"event_type".as("dst"))
-            .unionByName(ev.where($"is_last")
-              .select($"event_type".as("src"), lit("^end").as("dst")))
-            .groupBy($"src", $"dst").agg(count(lit(1)).as("n"))
-            .select($"src", $"dst", $"n",
-              sum($"n").over(Window.partitionBy($"src")).as("wt"))
-            .withColumn("corpus_sig", lit(sig))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(staging.toString)
-          graft.core.CommitProtocol.publish(staging, Seq(staging -> path)) {
-            java.nio.file.Files.createFile(path.resolve("_GRAFT_COMMITTED")); ()
-          }
-        }
-      }
-      spark.read.parquet(path.toString).select($"src", $"dst", $"n", $"wt")
-    }
+      val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
+      val ev = Tables.events(spark, sfDir)
+        .select($"user_id", $"ts", $"event_id", $"event_type")
+        .select($"event_type",
+          coalesce(lag($"event_type", 1).over(w), lit("^start")).as("src"),
+          lead($"event_type", 1).over(w).isNull.as("is_last"))
+      ev.select($"src", $"event_type".as("dst"))
+        .unionByName(ev.where($"is_last")
+          .select($"event_type".as("src"), lit("^end").as("dst")))
+        .groupBy($"src", $"dst").agg(count(lit(1)).as("n"))
+        .select($"src", $"dst", $"n",
+          sum($"n").over(Window.partitionBy($"src")).as("wt"))
+    }.select("src", "dst", "n", "wt")
 
   /** Batch journey gate: every event scored against the COMMITTED
     * matrix with the streaming gate's exact rule — n = 0 (unknown

@@ -701,49 +701,31 @@ object MultimodalMeta {
   // is the read view a probe gets in a fresh session WITHOUT touching
   // a payload.
   private[queries] def phashIndexRoot(spark: SparkSession,
-      sfDir: String): java.nio.file.Path = {
-    import spark.implicits._
-    val root = graft.core.Scratch.dir("phash-index", sfDir)
-    graft.operators.Staging.memoized(spark, sfDir, "phash-index-built") {
-      // content-sensitive corpus signature (the postingsIndexRoot
-      // discipline): a doc-id-preserving rewrite invalidates
-      val sig = Tables.documents(spark, sfDir)
-        .agg(expr(
-          "sum(cast(length(text) as bigint) + 31L * doc_id) + 1000003L * count(*)"))
-        .head().getLong(0)
-      val sigFile = root.resolve("_GRAFT_SIG")
-      val current =
-        PhashIndex.isCommitted(root) &&
-        PhashIndex.committedDeltaCount(root) == 2 &&
-        java.nio.file.Files.exists(sigFile) &&
-        java.nio.file.Files.readString(sigFile).trim == sig.toString
-      if (!current) {
-        java.nio.file.Files.deleteIfExists(sigFile)
-        val ph = phash60(spark, sfDir)
-        val fr = frameHashRows(Tables.documents(spark, sfDir)
-            .select($"doc_id".as("asset_id"), $"text"))
-          .distinct().select($"asset_id", $"h".as("fh"))
-        PhashIndex.writeBase(spark, root,
-          ph.filter($"asset_id" % ArriveMod =!= ArriveRem),
-          fr.filter($"asset_id" % ArriveMod =!= ArriveRem))
-        PhashIndex.applyMaintenance(spark, root,
-          phashAdds = ph.filter($"asset_id" % ArriveMod === ArriveRem),
-          frameAdds = fr.filter($"asset_id" % ArriveMod === ArriveRem),
-          tombs = spark.emptyDataset[Long].toDF("asset_id"))
-        val tombs = Tables.documents(spark, sfDir)
-          .select($"doc_id".as("asset_id"))
-          .filter($"asset_id" % DeleteMod === DeleteRem)
-        PhashIndex.applyMaintenance(spark, root,
-          phashAdds = spark.emptyDataset[(Long, Long)].toDF("asset_id", "h"),
-          frameAdds = spark.emptyDataset[(Long, String)].toDF("asset_id", "fh"),
-          tombs = tombs)
-        // sig LAST: a crash mid-build leaves no sig → next session rebuilds
-        java.nio.file.Files.writeString(sigFile, sig.toString)
-      }
-      Seq(root.toString).toDF("root")
-    }.count()
-    root
-  }
+      sfDir: String): java.nio.file.Path =
+    // content-sensitive corpus signature (the postingsIndexRoot
+    // discipline): a doc-id-preserving rewrite invalidates
+    graft.core.StoreLayout.maintainedRoot(spark, sfDir, "phash-index",
+      Tables.documents(spark, sfDir), graft.core.StoreLayout.DocumentsSig) { root =>
+      import spark.implicits._
+      val ph = phash60(spark, sfDir)
+      val fr = frameHashRows(Tables.documents(spark, sfDir)
+          .select($"doc_id".as("asset_id"), $"text"))
+        .distinct().select($"asset_id", $"h".as("fh"))
+      PhashIndex.writeBase(spark, root,
+        ph.filter($"asset_id" % ArriveMod =!= ArriveRem),
+        fr.filter($"asset_id" % ArriveMod =!= ArriveRem))
+      PhashIndex.applyMaintenance(spark, root,
+        phashAdds = ph.filter($"asset_id" % ArriveMod === ArriveRem),
+        frameAdds = fr.filter($"asset_id" % ArriveMod === ArriveRem),
+        tombs = spark.emptyDataset[Long].toDF("asset_id"))
+      val tombs = Tables.documents(spark, sfDir)
+        .select($"doc_id".as("asset_id"))
+        .filter($"asset_id" % DeleteMod === DeleteRem)
+      PhashIndex.applyMaintenance(spark, root,
+        phashAdds = spark.emptyDataset[(Long, Long)].toDF("asset_id", "h"),
+        frameAdds = spark.emptyDataset[(Long, String)].toDF("asset_id", "fh"),
+        tombs = tombs)
+    }
 
   /** Bench setup hook (the Dedup.prewarmIndex rationale). */
   def prewarmPhashIndex(spark: SparkSession, sfDir: String): Unit = {

@@ -3,7 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
+import graft.core.StoreLayout
+import graft.core.StoreLayout.readDir
 
 /** COMMITTED BINARY-MODALITY FINGERPRINT INDEX — the write loop behind
   * the asset maintenance legs (judge r16 #1: after DedupIndex,
@@ -55,29 +57,6 @@ object PhashIndex {
     StructField("fh", StringType)))
   private val tombSchema = StructType(Seq(StructField("asset_id", LongType)))
 
-  private def marker(dir: Path): Path = StoreLayout.marker(dir)
-
-  private[graft] def currentBaseDir(root: Path): Option[Path] =
-    StoreLayout.currentBaseDir(root)
-
-  private[graft] def isCommitted(root: Path): Boolean =
-    StoreLayout.isCommitted(root)
-
-  private def readDir(spark: SparkSession, dir: Path, schema: StructType): DataFrame =
-    StoreLayout.readDir(spark, dir, schema)
-
-  private def committedDeltas(base: Path): Seq[Path] =
-    StoreLayout.committedDeltas(base)
-
-  private[graft] def committedDeltaCount(root: Path): Int =
-    StoreLayout.committedDeltaCount(root)
-
-  private def requireBase(root: Path): Path =
-    StoreLayout.requireBase(root, "phash index")
-
-  private[graft] def appliedEpochs(root: Path): Set[Long] =
-    StoreLayout.appliedEpochs(root)
-
   private def normPhash(df: DataFrame): DataFrame =
     df.select(col("asset_id").cast("long"), col("h").cast("long"))
 
@@ -87,21 +66,13 @@ object PhashIndex {
   /** Publish the full-pass snapshot: both fingerprint grains staged
     * together and committed by one marker. `carryEpochs` (compaction
     * paths only) carries the applied replay epochs forward (advisor
-    * r16 — [[StoreLayout.stageEpochCarry]]). */
+    * r16 — [[StoreLayout.publishBase]]). */
   def writeBase(spark: SparkSession, root: Path, phashes: DataFrame,
-      frames: DataFrame, carryEpochs: Boolean = false): Unit = {
-    Files.createDirectories(root)
-    val dest = StoreLayout.nextBaseDest(root)
-    val staging = root.getParent.resolve(root.getFileName.toString + "-staging")
-    graft.core.CommitProtocol.deleteRecursively(staging)
-    normPhash(phashes).write.parquet(staging.resolve("phash").toString)
-    normFrames(frames).write.parquet(staging.resolve("frames").toString)
-    if (carryEpochs) StoreLayout.stageEpochCarry(root, staging)
-    graft.core.CommitProtocol.publish(staging, Seq(staging -> dest)) {
-      Files.createFile(marker(dest)); ()
+      frames: DataFrame, carryEpochs: Boolean = false): Unit =
+    StoreLayout.publishBase(root, carryEpochs) { staging =>
+      normPhash(phashes).write.parquet(staging.resolve("phash").toString)
+      normFrames(frames).write.parquet(staging.resolve("frames").toString)
     }
-    StoreLayout.retireSuperseded(root, keep = dest)
-  }
 
   /** Fold one maintenance batch in: `phashAdds` (asset_id, h) and
     * `frameAdds` (asset_id, fh) are the arriving batch's fingerprints
@@ -113,38 +84,28 @@ object PhashIndex {
     * streaming replay tag ([[DedupIndex.applyMaintenance]]). */
   def applyMaintenance(spark: SparkSession, root: Path,
       phashAdds: DataFrame, frameAdds: DataFrame, tombs: DataFrame,
-      epoch: Option[Long] = None): Unit = {
-    if (epoch.exists(appliedEpochs(root).contains)) return
-    val base = requireBase(root)
-    val n = committedDeltas(base).size + 1
-    val dest = base.resolve(s"delta=$n")
-    val staging = root.getParent.resolve(s"${root.getFileName}-delta-staging")
-    graft.core.CommitProtocol.deleteRecursively(staging)
-    normPhash(phashAdds).coalesce(1)
-      .write.parquet(staging.resolve("adds_phash").toString)
-    normFrames(frameAdds).coalesce(1)
-      .write.parquet(staging.resolve("adds_frames").toString)
-    tombs.select(col(tombs.columns.head).cast("long").as("asset_id"))
-      .coalesce(1).write.parquet(staging.resolve("tombs").toString)
-    StoreLayout.stageEpochTag(staging, epoch)
-    graft.core.CommitProtocol.publish(staging, Seq(staging -> dest)) {
-      Files.createFile(marker(dest)); ()
+      epoch: Option[Long] = None): Unit =
+    StoreLayout.publishDelta(root, epoch) { staging =>
+      normPhash(phashAdds).coalesce(1)
+        .write.parquet(staging.resolve("adds_phash").toString)
+      normFrames(frameAdds).coalesce(1)
+        .write.parquet(staging.resolve("adds_frames").toString)
+      tombs.select(col(tombs.columns.head).cast("long").as("asset_id"))
+        .coalesce(1).write.parquet(staging.resolve("tombs").toString)
     }
-  }
 
-  private def compose(spark: SparkSession, base: Path, sub: String,
+  private def compose(spark: SparkSession, root: Path, sub: String,
       addsSub: String, schema: StructType): DataFrame = {
-    var view = readDir(spark, base.resolve(sub), schema)
-    committedDeltas(base).zipWithIndex.foreach { case (d, i) =>
+    val base = StoreLayout.requireBase(root)
+    val view = StoreLayout.foldDeltas(base,
+        readDir(spark, base.resolve(sub), schema)) { (view, d) =>
       val tombs = readDir(spark, d.resolve("tombs"), tombSchema)
       val adds = readDir(spark, d.resolve(addsSub), schema)
       // upsert: view' = (view \ (adds.assets ∪ tombs)) ∪ (adds \ tombs)
       val replaced = adds.select(col("asset_id")).distinct()
         .unionByName(tombs).distinct()
-      view = view.join(replaced, Seq("asset_id"), "left_anti")
+      view.join(replaced, Seq("asset_id"), "left_anti")
         .unionByName(adds.join(tombs, Seq("asset_id"), "left_anti"))
-      if ((i + 1) % DedupIndex.ChainCutEvery == 0)
-        view = view.localCheckpoint(eager = false)
     }
     // pin canonical column order (USING keys float to the front)
     view.select(schema.fieldNames.map(col).toSeq: _*)
@@ -152,25 +113,17 @@ object PhashIndex {
 
   /** The composed live aHash table (asset_id, h). */
   def phash(spark: SparkSession, root: Path): DataFrame =
-    compose(spark, requireBase(root), "phash", "adds_phash", phashSchema)
+    compose(spark, root, "phash", "adds_phash", phashSchema)
 
   /** The composed live frame-fingerprint table (asset_id, fh). */
   def frames(spark: SparkSession, root: Path): DataFrame =
-    compose(spark, requireBase(root), "frames", "adds_frames", frameSchema)
+    compose(spark, root, "frames", "adds_frames", frameSchema)
 
-  /** Operational counters for the health face (q_index_health), on the
-    * aHash grain: (delta-chain length, base rows, Σ delta add rows,
-    * composed live rows). */
+  /** Health counters (q_index_health) on the aHash grain
+    * ([[StoreLayout.healthCounts]]). */
   private[graft] def healthCounts(spark: SparkSession,
-      root: Path): (Long, Long, Long, Long) = {
-    val base = requireBase(root)
-    val deltas = committedDeltas(base)
-    // base/add counts from parquet footers (driver-side, no Spark job)
-    val nBase = StoreLayout.footerRowCount(spark, base.resolve("phash"))
-    val nAdds = deltas.map(d =>
-      StoreLayout.footerRowCount(spark, d.resolve("adds_phash"))).sum
-    (deltas.size.toLong, nBase, nAdds, phash(spark, root).count())
-  }
+      root: Path): (Long, Long, Long, Long) =
+    StoreLayout.healthCounts(spark, root, "phash", "adds_phash")(phash(spark, root))
 
   /** Fold the delta chain into a new base — the physical erasure of
     * tombstoned fingerprints in both grains. */

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import java.nio.file.{Files, Path}
+import graft.core.StoreLayout
+import graft.core.StoreLayout.readDir
 
 /** COMMITTED RETRIEVAL INDEX — the write loop behind the postings
   * maintenance legs (judge r15 #1: after DedupIndex/SemanticIndex
@@ -73,18 +75,9 @@ object PostingsIndex {
     StructField("tot", LongType)))
   private val tombSchema = StructType(Seq(StructField("doc_id", LongType)))
 
-  // disk layout (versioning, markers, delta chains, replay epochs) is
-  // the shared StoreLayout — see its scaladoc for the crash semantics
-  private def marker(dir: Path): Path = StoreLayout.marker(dir)
-
-  private[graft] def currentBaseDir(root: Path): Option[Path] =
-    StoreLayout.currentBaseDir(root)
-
-  private[graft] def isCommitted(root: Path): Boolean =
-    StoreLayout.isCommitted(root)
-
-  private def readDir(spark: SparkSession, dir: Path, schema: StructType): DataFrame =
-    StoreLayout.readDir(spark, dir, schema)
+  // disk layout (versioning, markers, delta chains, replay epochs) and
+  // the publish paths are the shared StoreLayout — see its scaladoc for
+  // the crash semantics
 
   private def normalize(postings: DataFrame): DataFrame =
     postings.select(col("term").cast("string"), col("doc_id").cast("long"),
@@ -111,45 +104,25 @@ object PostingsIndex {
     * one marker — the three artifacts can never be published out of
     * step. */
   def writeBase(spark: SparkSession, root: Path, postings: DataFrame,
-      carryEpochs: Boolean = false): Unit = {
-    Files.createDirectories(root)
-    val dest = StoreLayout.nextBaseDest(root)
-    val staging = root.getParent.resolve(root.getFileName.toString + "-staging")
-    graft.core.CommitProtocol.deleteRecursively(staging)
-    // doc-bucketed base layout (judge r16 #6): partitioned by the doc
-    // hash bucket so maintenance probes prune; readers drop the column.
-    // REPARTITION by the bucket column before the partitioned write
-    // (guide §6, Iceberg's hash write.distribution-mode): without it
-    // every write task emits a file into every bucket dir — #tasks ×
-    // #buckets small files (522 measured at sf0.1; the r17 composed
-    // reads and footer counts paid per-file overhead on all of them) —
-    // with it each bucket is written by one task: ≤ #buckets files.
-    normalize(postings).withColumn("bucket", bucketCol)
-      .repartition(DocBuckets, col("bucket"))
-      .write.partitionBy("bucket")
-      .parquet(staging.resolve("postings").toString)
-    val staged = readDir(spark, staging.resolve("postings"), basePostingSchema)
-      .drop("bucket")
-    statsOf(staged).coalesce(1).write.parquet(staging.resolve("stats").toString)
-    corpusOf(staged).coalesce(1).write.parquet(staging.resolve("corpus").toString)
-    if (carryEpochs) StoreLayout.stageEpochCarry(root, staging)
-    graft.core.CommitProtocol.publish(staging, Seq(staging -> dest)) {
-      Files.createFile(marker(dest)); ()
+      carryEpochs: Boolean = false): Unit =
+    StoreLayout.publishBase(root, carryEpochs) { staging =>
+      // doc-bucketed base layout (judge r16 #6): partitioned by the doc
+      // hash bucket so maintenance probes prune; readers drop the column.
+      // REPARTITION by the bucket column before the partitioned write
+      // (guide §6, Iceberg's hash write.distribution-mode): without it
+      // every write task emits a file into every bucket dir — #tasks ×
+      // #buckets small files (522 measured at sf0.1; the r17 composed
+      // reads and footer counts paid per-file overhead on all of them) —
+      // with it each bucket is written by one task: ≤ #buckets files.
+      normalize(postings).withColumn("bucket", bucketCol)
+        .repartition(DocBuckets, col("bucket"))
+        .write.partitionBy("bucket")
+        .parquet(staging.resolve("postings").toString)
+      val staged = readDir(spark, staging.resolve("postings"), basePostingSchema)
+        .drop("bucket")
+      statsOf(staged).coalesce(1).write.parquet(staging.resolve("stats").toString)
+      corpusOf(staged).coalesce(1).write.parquet(staging.resolve("corpus").toString)
     }
-    StoreLayout.retireSuperseded(root, keep = dest)
-  }
-
-  private def committedDeltas(base: Path): Seq[Path] =
-    StoreLayout.committedDeltas(base)
-
-  private[graft] def committedDeltaCount(root: Path): Int =
-    StoreLayout.committedDeltaCount(root)
-
-  private def requireBase(root: Path): Path =
-    StoreLayout.requireBase(root, "postings index")
-
-  private[graft] def appliedEpochs(root: Path): Set[Long] =
-    StoreLayout.appliedEpochs(root)
 
   /** True when the current base's postings use the r17 doc-bucketed
     * layout — the content signature cannot see a LAYOUT change, so the
@@ -157,7 +130,7 @@ object PostingsIndex {
     * store. An empty postings dir counts as bucketed (a partitioned
     * write of zero rows emits no partition dirs). */
   private[graft] def isBucketed(root: Path): Boolean =
-    currentBaseDir(root).exists { b =>
+    StoreLayout.currentBaseDir(root).exists { b =>
       val dir = b.resolve("postings")
       Files.isDirectory(dir) && {
         val ds = Files.list(dir)
@@ -172,7 +145,7 @@ object PostingsIndex {
 
   /** The composed live inverted index (term, doc_id, dl, tf). Plan
     * depth on long chains is bounded by the shared lineage-cut cadence
-    * ([[DedupIndex.ChainCutEvery]]). */
+    * ([[StoreLayout.foldDeltas]]). */
   def postings(spark: SparkSession, root: Path): DataFrame =
     composed(spark, root, buckets = None)
 
@@ -186,13 +159,13 @@ object PostingsIndex {
 
   private def composed(spark: SparkSession, root: Path,
       buckets: Option[Seq[Int]]): DataFrame = {
-    val base = requireBase(root)
+    val base = StoreLayout.requireBase(root)
     val baseRaw = readDir(spark, base.resolve("postings"), basePostingSchema)
-    var view = buckets
+    val baseView = buckets
       .map(bs => baseRaw.filter(col("bucket").isin(bs.map(Integer.valueOf): _*)))
       .getOrElse(baseRaw)
       .drop("bucket")
-    committedDeltas(base).zipWithIndex.foreach { case (d, i) =>
+    val view = StoreLayout.foldDeltas(base, baseView) { (view, d) =>
       val tombs = readDir(spark, d.resolve("tombs"), tombSchema)
       val adds = readDir(spark, d.resolve("adds"), postingSchema)
       // UPSERT semantics per delta (advisor r16: a plain union let a
@@ -204,10 +177,8 @@ object PostingsIndex {
       // express insert, update, and delete.
       val replaced = adds.select(col("doc_id")).distinct()
         .unionByName(tombs).distinct()
-      view = view.join(replaced, Seq("doc_id"), "left_anti")
+      view.join(replaced, Seq("doc_id"), "left_anti")
         .unionByName(adds.join(tombs, Seq("doc_id"), "left_anti"))
-      if ((i + 1) % DedupIndex.ChainCutEvery == 0)
-        view = view.localCheckpoint(eager = false)
     }
     // the anti-join's USING key floats doc_id to the front — pin the
     // canonical column order whatever the chain length
@@ -220,9 +191,9 @@ object PostingsIndex {
     * idf) and drops from the view — the delete leg's alert condition,
     * physically honored by the read path. */
   def stats(spark: SparkSession, root: Path): DataFrame = {
-    val base = requireBase(root)
+    val base = StoreLayout.requireBase(root)
     val parts = readDir(spark, base.resolve("stats"), statsSchema) +:
-      committedDeltas(base).map(d =>
+      StoreLayout.committedDeltas(base).map(d =>
         readDir(spark, d.resolve("stats_delta"), statsSchema))
     parts.reduce(_ unionByName _)
       .groupBy(col("term"))
@@ -232,9 +203,9 @@ object PostingsIndex {
 
   /** The composed 1-row BM25 constants (n_docs, tot). */
   def corpusStats(spark: SparkSession, root: Path): DataFrame = {
-    val base = requireBase(root)
+    val base = StoreLayout.requireBase(root)
     val parts = readDir(spark, base.resolve("corpus"), corpusSchema) +:
-      committedDeltas(base).map(d =>
+      StoreLayout.committedDeltas(base).map(d =>
         readDir(spark, d.resolve("corpus_delta"), corpusSchema))
     parts.reduce(_ unionByName _)
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("tot")).as("tot"))
@@ -252,70 +223,52 @@ object PostingsIndex {
     * full-vocabulary pass. `epoch` is the streaming replay tag
     * ([[DedupIndex.applyMaintenance]]). */
   def applyMaintenance(spark: SparkSession, root: Path,
-      adds: DataFrame, tombs: DataFrame, epoch: Option[Long] = None): Unit = {
-    if (epoch.exists(appliedEpochs(root).contains)) return
-    val base = requireBase(root)
-    val n = committedDeltas(base).size + 1
-    val dest = base.resolve(s"delta=$n")
-    val staging = root.getParent.resolve(s"${root.getFileName}-delta-staging")
-    graft.core.CommitProtocol.deleteRecursively(staging)
-    normalize(adds).coalesce(1).write.parquet(staging.resolve("adds").toString)
-    val tombsNorm = tombs.select(
-      col(tombs.columns.head).cast("long").as("doc_id"))
-    tombsNorm.coalesce(1).write.parquet(staging.resolve("tombs").toString)
-    // shifts computed from the STAGED bytes (validation against
-    // staging, the protocol rule). The retraction mirrors the upsert
-    // composition exactly: dead rows are the standing rows of every
-    // replaced-or-tombstoned doc PLUS the staged adds of docs
-    // tombstoned in the same batch — so a within-batch add+tomb nets
-    // to zero and a re-add retracts the OLD rows it replaces.
-    val stagedAdds = readDir(spark, staging.resolve("adds"), postingSchema)
-    val stagedTombs = readDir(spark, staging.resolve("tombs"), tombSchema)
-    val replaced = stagedAdds.select(col("doc_id")).distinct()
-      .unionByName(stagedTombs).distinct()
-    // bucket-pruned probe (judge r16 #6): the replaced/tombstoned docs
-    // touch ≤ DocBuckets base partitions — collect the touched bucket
-    // ids (a bounded ≤ DocBuckets-row model artifact, never data) and
-    // push them into the base scan as a partition filter, so the
-    // retraction reads O(touched buckets), not the whole index
-    val touched = replaced.select(bucketCol.cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val probe =
-      if (touched.isEmpty) postings(spark, root).limit(0)
-      else postingsForBuckets(spark, root, touched)
-    val dead = probe.join(replaced, Seq("doc_id"), "left_semi")
-      .unionByName(stagedAdds.join(stagedTombs, Seq("doc_id"), "left_semi"))
-    val shift = statsOf(stagedAdds)
-      .unionByName(statsOf(dead)
-        .select(col("term"), (-col("df")).as("df"), (-col("cf")).as("cf")))
-      .groupBy(col("term"))
-      .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
-      .filter(col("df") =!= 0 || col("cf") =!= 0)
-    shift.coalesce(1).write.parquet(staging.resolve("stats_delta").toString)
-    corpusOf(stagedAdds)
-      .unionByName(corpusOf(dead)
-        .select((-col("n_docs")).as("n_docs"), (-col("tot")).as("tot")))
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("tot")).as("tot"))
-      .coalesce(1).write.parquet(staging.resolve("corpus_delta").toString)
-    StoreLayout.stageEpochTag(staging, epoch)
-    graft.core.CommitProtocol.publish(staging, Seq(staging -> dest)) {
-      Files.createFile(marker(dest)); ()
+      adds: DataFrame, tombs: DataFrame, epoch: Option[Long] = None): Unit =
+    StoreLayout.publishDelta(root, epoch) { staging =>
+      normalize(adds).coalesce(1).write.parquet(staging.resolve("adds").toString)
+      tombs.select(col(tombs.columns.head).cast("long").as("doc_id"))
+        .coalesce(1).write.parquet(staging.resolve("tombs").toString)
+      // shifts computed from the STAGED bytes (validation against
+      // staging, the protocol rule). The retraction mirrors the upsert
+      // composition exactly: dead rows are the standing rows of every
+      // replaced-or-tombstoned doc PLUS the staged adds of docs
+      // tombstoned in the same batch — so a within-batch add+tomb nets
+      // to zero and a re-add retracts the OLD rows it replaces.
+      val stagedAdds = readDir(spark, staging.resolve("adds"), postingSchema)
+      val stagedTombs = readDir(spark, staging.resolve("tombs"), tombSchema)
+      val replaced = stagedAdds.select(col("doc_id")).distinct()
+        .unionByName(stagedTombs).distinct()
+      // bucket-pruned probe (judge r16 #6): the replaced/tombstoned docs
+      // touch ≤ DocBuckets base partitions — collect the touched bucket
+      // ids (a bounded ≤ DocBuckets-row model artifact, never data) and
+      // push them into the base scan as a partition filter, so the
+      // retraction reads O(touched buckets), not the whole index
+      val touched = replaced.select(bucketCol.cast("int").as("b"))
+        .distinct().collect().map(_.getInt(0)).toSeq
+      val probe =
+        if (touched.isEmpty) postings(spark, root).limit(0)
+        else postingsForBuckets(spark, root, touched)
+      val dead = probe.join(replaced, Seq("doc_id"), "left_semi")
+        .unionByName(stagedAdds.join(stagedTombs, Seq("doc_id"), "left_semi"))
+      val shift = statsOf(stagedAdds)
+        .unionByName(statsOf(dead)
+          .select(col("term"), (-col("df")).as("df"), (-col("cf")).as("cf")))
+        .groupBy(col("term"))
+        .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
+        .filter(col("df") =!= 0 || col("cf") =!= 0)
+      shift.coalesce(1).write.parquet(staging.resolve("stats_delta").toString)
+      corpusOf(stagedAdds)
+        .unionByName(corpusOf(dead)
+          .select((-col("n_docs")).as("n_docs"), (-col("tot")).as("tot")))
+        .agg(sum(col("n_docs")).as("n_docs"), sum(col("tot")).as("tot"))
+        .coalesce(1).write.parquet(staging.resolve("corpus_delta").toString)
     }
-  }
 
-  /** Operational counters for the health face (q_index_health):
-    * (delta-chain length, base posting rows, Σ delta add rows, composed
-    * live posting rows). Base/add counts read parquet footers on the
-    * driver (no Spark job); only the composed live count runs one. */
+  /** Health counters (q_index_health) on the posting grain
+    * ([[StoreLayout.healthCounts]]). */
   private[graft] def healthCounts(spark: SparkSession,
-      root: Path): (Long, Long, Long, Long) = {
-    val base = requireBase(root)
-    val deltas = committedDeltas(base)
-    val nBase = StoreLayout.footerRowCount(spark, base.resolve("postings"))
-    val nAdds = deltas.map(d =>
-      StoreLayout.footerRowCount(spark, d.resolve("adds"))).sum
-    (deltas.size.toLong, nBase, nAdds, postings(spark, root).count())
-  }
+      root: Path): (Long, Long, Long, Long) =
+    StoreLayout.healthCounts(spark, root, "postings", "adds")(postings(spark, root))
 
   /** Fold the delta chain into a new base — the physical erasure of
     * retracted postings and the re-materialization of the sidecar. */

@@ -871,46 +871,30 @@ object Retrieval {
   // a BM25 consumer gets in a fresh session WITHOUT re-aggregating the
   // corpus.
   private[graft] def postingsIndexRoot(spark: SparkSession,
-      sfDir: String): java.nio.file.Path = {
-    import spark.implicits._
-    val root = graft.core.Scratch.dir("postings-index", sfDir)
-    graft.operators.Staging.memoized(spark, sfDir, "postings-index-built") {
-      // content-sensitive corpus signature (the Dedup.maintainedIndexRoot
-      // discipline, review r15): a doc-id-preserving rewrite invalidates
-      val sig = graft.core.Tables.documents(spark, sfDir)
-        .agg(expr(
-          "sum(cast(length(text) as bigint) + 31L * doc_id) + 1000003L * count(*)"))
-        .head().getLong(0)
-      val sigFile = root.resolve("_GRAFT_SIG")
-      val current =
-        PostingsIndex.isCommitted(root) &&
-        PostingsIndex.committedDeltaCount(root) == 2 &&
-        PostingsIndex.isBucketed(root) &&
-        java.nio.file.Files.exists(sigFile) &&
-        java.nio.file.Files.readString(sigFile).trim == sig.toString
-      if (!current) {
-        java.nio.file.Files.deleteIfExists(sigFile)
-        val post = postings(spark, sfDir)
-          .select($"term", $"doc_id", $"dl", $"tf")
-        PostingsIndex.writeBase(spark, root,
-          post.filter($"doc_id" % PostArriveMod =!= PostArriveRem))
-        PostingsIndex.applyMaintenance(spark, root,
-          adds = post.filter($"doc_id" % PostArriveMod === PostArriveRem),
-          tombs = spark.emptyDataset[Long].toDF("doc_id"))
-        val tombs = PostingsIndex.postings(spark, root)
-          .filter($"doc_id" % PostDeleteMod === PostDeleteRem)
-          .select($"doc_id").distinct()
-        PostingsIndex.applyMaintenance(spark, root,
-          adds = spark.emptyDataset[(String, Long, Long, Long)]
-            .toDF("term", "doc_id", "dl", "tf"),
-          tombs = tombs)
-        // sig LAST: a crash mid-build leaves no sig → next session rebuilds
-        java.nio.file.Files.writeString(sigFile, sig.toString)
-      }
-      Seq(root.toString).toDF("root")
-    }.count()
-    root
-  }
+      sfDir: String): java.nio.file.Path =
+    // content-sensitive corpus signature (the Dedup.maintainedIndexRoot
+    // discipline, review r15); the signature cannot see the r17
+    // doc-bucketed LAYOUT, so a pre-bucketing store also rebuilds
+    graft.core.StoreLayout.maintainedRoot(spark, sfDir, "postings-index",
+      graft.core.Tables.documents(spark, sfDir),
+      graft.core.StoreLayout.DocumentsSig,
+      current = PostingsIndex.isBucketed) { root =>
+      import spark.implicits._
+      val post = postings(spark, sfDir)
+        .select($"term", $"doc_id", $"dl", $"tf")
+      PostingsIndex.writeBase(spark, root,
+        post.filter($"doc_id" % PostArriveMod =!= PostArriveRem))
+      PostingsIndex.applyMaintenance(spark, root,
+        adds = post.filter($"doc_id" % PostArriveMod === PostArriveRem),
+        tombs = spark.emptyDataset[Long].toDF("doc_id"))
+      val tombs = PostingsIndex.postings(spark, root)
+        .filter($"doc_id" % PostDeleteMod === PostDeleteRem)
+        .select($"doc_id").distinct()
+      PostingsIndex.applyMaintenance(spark, root,
+        adds = spark.emptyDataset[(String, Long, Long, Long)]
+          .toDF("term", "doc_id", "dl", "tf"),
+        tombs = tombs)
+    }
 
   /** Bench setup hook (the Dedup.prewarmIndex rationale). */
   def prewarmPostingsIndex(spark: SparkSession, sfDir: String): Unit = {

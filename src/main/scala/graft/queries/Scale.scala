@@ -310,37 +310,6 @@ object Scale {
   // — DuckDB never needs to read ORC. ORC is the other columnar
   // format a lake ingests from (Hive-lineage pipelines); the read is
   // schema-declared like every reader in the repo.
-  /** A stage-* dir younger than this may be another process's in-flight
-    * build and must survive the residue sweep; older ones are crash
-    * leftovers. One hour dwarfs any real mirror write time. */
-  private[queries] val OrcStageTtlMs: Long = 60L * 60 * 1000
-
-  /** Liveness check for a foreign stage-* dir: the builder that created
-    * it records its pid in `_owner`; while that pid is alive the dir is
-    * an in-flight build no matter how old (a write can outlive the TTL,
-    * and writer/sweeper clock skew can fake age — review r10). A dir
-    * with no `_owner` (pre-r11 residue) or a dead owner falls back to
-    * the mtime TTL. /proc is the liveness source — the scratch contract
-    * is single-host (one machine owns the scratch dir), so same-host
-    * pid probing is sound. */
-  private[queries] def stageOwnerAlive(p: java.nio.file.Path): Boolean = {
-    val owner = p.resolve("_owner")
-    java.nio.file.Files.exists(owner) && {
-      try {
-        val pid = new String(java.nio.file.Files.readAllBytes(owner),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-        java.nio.file.Files.isDirectory(
-          java.nio.file.Paths.get("/proc", pid.toString))
-      } catch {
-        // a garbled _owner is not-alive; so is one a concurrent sweeper
-        // deleted between the exists() probe and the read (NoSuchFile /
-        // any IO failure) — fall back to the mtime TTL, never fail the
-        // whole mirror build (review r11 advice)
-        case _: NumberFormatException | _: java.io.IOException => false
-      }
-    }
-  }
-
   private[queries] def orcMirror(spark: SparkSession, sfDir: String): String =
     this.synchronized {
       // serialize builders through the same per-process lock every other
@@ -348,44 +317,12 @@ object Scale {
       // holds. Cross-JVM scope is unchanged from those builds' documented
       // contract: one JVM owns the scratch dir (a shared deployment
       // publishes mirrors at ingest, not on first query).
-      val dest = graft.core.Scratch.dir("orc_mirror", sfDir)
-      val data = dest.resolve("data")
-      val marker = dest.resolve("_committed")
-      if (!java.nio.file.Files.exists(marker)) {
-        // review r9 (judge item 3): the old no-marker wipe deleted
-        // EVERYTHING under dest — including a concurrent (cross-JVM)
-        // builder's fresh stage-* dir, destroying its in-flight write.
-        // Residue clearing is now SELECTIVE: the moved-but-unmarked
-        // data dir is always residue, but stage-* dirs are only cleared
-        // past the freshness TTL (OrcMirrorSpec pins both behaviors).
-        graft.core.CommitProtocol.deleteRecursively(data)
-        if (java.nio.file.Files.isDirectory(dest)) {
-          val cutoff = System.currentTimeMillis() - OrcStageTtlMs
-          val ls = java.nio.file.Files.list(dest)
-          try ls.forEach { p =>
-            if (p.getFileName.toString.startsWith("stage-") &&
-                java.nio.file.Files.getLastModifiedTime(p).toMillis < cutoff &&
-                !stageOwnerAlive(p))
-              graft.core.CommitProtocol.deleteRecursively(p)
-          } finally ls.close()
-        }
-        java.nio.file.Files.createDirectories(dest)
-        val staging = java.nio.file.Files.createTempDirectory(dest, "stage-")
-        // liveness file: while this JVM lives, no sweeper (this one or a
-        // concurrent builder's) may treat the dir as crash residue
-        java.nio.file.Files.write(staging.resolve("_owner"),
-          java.util.Arrays.asList(ProcessHandle.current().pid().toString))
-        val staged = staging.resolve("data")
+      graft.core.StoreLayout.ownedMirror(
+          graft.core.Scratch.dir("orc_mirror", sfDir)) { staged =>
         Tables.documents(spark, sfDir)
           .select(col("doc_id"), col("source"), col("n_chars"))
           .write.mode("overwrite").orc(staged.toString)
-        graft.core.CommitProtocol.publish(staging, Seq(staged -> data)) {
-          java.nio.file.Files.write(marker,
-            java.util.Arrays.asList("committed"))
-          ()
-        }
-      }
-      data.toString
+      }.toString
     }
 
   def qOrcRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {

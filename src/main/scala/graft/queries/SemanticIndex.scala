@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 import java.nio.file.{Files, Path}
+import graft.core.StoreLayout
+import graft.core.StoreLayout.readDir
 
 /** COMMITTED SEMANTIC CELL INDEX — the semantic-family half of the
   * read-modify-WRITE loop (judge r14 #2 named "the semantic twins"
@@ -61,57 +63,25 @@ object SemanticIndex {
     StructField("cluster_id", LongType),
     StructField("cv", ArrayType(DoubleType))))
 
-  // disk layout (versioning, markers, delta chains, replay epochs) is
-  // the shared StoreLayout — see its scaladoc for the crash semantics
-  private def marker(dir: Path): Path = StoreLayout.marker(dir)
-
-  /** The current committed base snapshot dir (highest marked base-N). */
-  private[graft] def currentBaseDir(root: Path): Option[Path] =
-    StoreLayout.currentBaseDir(root)
-
-  private[graft] def isCommitted(root: Path): Boolean =
-    StoreLayout.isCommitted(root)
-
-  private def readDir(spark: SparkSession, dir: Path, schema: StructType): DataFrame =
-    StoreLayout.readDir(spark, dir, schema)
+  // disk layout (versioning, markers, delta chains, replay epochs) and
+  // the publish paths are the shared StoreLayout — see its scaladoc for
+  // the crash semantics
 
   /** Publish the full-pass snapshot (vec_id, cell) as the next base
     * version, optionally with the centroid `model` it was assigned
     * under. Marker = commit point; the previous version (with its delta
     * chain) stays current and recoverable until then. `carryEpochs`
     * (compaction paths only) carries the applied replay epochs forward
-    * (advisor r16 — [[StoreLayout.stageEpochCarry]]). */
+    * (advisor r16 — [[StoreLayout.publishBase]]). */
   def writeBase(spark: SparkSession, root: Path, cells: DataFrame,
-      model: Option[DataFrame] = None, carryEpochs: Boolean = false): Unit = {
-    Files.createDirectories(root)
-    val dest = StoreLayout.nextBaseDest(root)
-    val staging = root.getParent.resolve(root.getFileName.toString + "-staging")
-    graft.core.CommitProtocol.deleteRecursively(staging)
-    cells.select(col("vec_id").cast("long"), col("cell").cast("long"))
-      .write.parquet(staging.resolve("cells").toString)
-    model.foreach(
-      _.select(col("cluster_id").cast("long"), col("cv").cast("array<double>"))
-        .coalesce(1).write.parquet(staging.resolve("model").toString))
-    if (carryEpochs) StoreLayout.stageEpochCarry(root, staging)
-    graft.core.CommitProtocol.publish(staging, Seq(staging -> dest)) {
-      Files.createFile(marker(dest)); ()
+      model: Option[DataFrame] = None, carryEpochs: Boolean = false): Unit =
+    StoreLayout.publishBase(root, carryEpochs) { staging =>
+      cells.select(col("vec_id").cast("long"), col("cell").cast("long"))
+        .write.parquet(staging.resolve("cells").toString)
+      model.foreach(
+        _.select(col("cluster_id").cast("long"), col("cv").cast("array<double>"))
+          .coalesce(1).write.parquet(staging.resolve("model").toString))
     }
-    StoreLayout.retireSuperseded(root, keep = dest)
-  }
-
-  private def committedDeltas(base: Path): Seq[Path] =
-    StoreLayout.committedDeltas(base)
-
-  private[graft] def committedDeltaCount(root: Path): Int =
-    StoreLayout.committedDeltaCount(root)
-
-  private def requireBase(root: Path): Path =
-    StoreLayout.requireBase(root, "cell index")
-
-  /** Streaming-replay epochs already folded into the current committed
-    * version — compaction carries them forward. */
-  private[graft] def appliedEpochs(root: Path): Set[Long] =
-    StoreLayout.appliedEpochs(root)
 
   /** Fold one maintenance batch in: `adds` are the ADMITTED arrivals
     * with their assigned cells (the door already rejected duplicates);
@@ -121,64 +91,44 @@ object SemanticIndex {
     * [[DedupIndex.applyMaintenance]]): an epoch already in the chain
     * makes the call a no-op, so micro-batch replays fold exactly once. */
   def applyMaintenance(spark: SparkSession, root: Path,
-      adds: DataFrame, tombs: DataFrame, epoch: Option[Long] = None): Unit = {
-    if (epoch.exists(appliedEpochs(root).contains)) return
-    val base = requireBase(root)
-    val n = committedDeltas(base).size + 1
-    val dest = base.resolve(s"delta=$n")
-    val staging = root.getParent.resolve(s"${root.getFileName}-delta-staging")
-    graft.core.CommitProtocol.deleteRecursively(staging)
-    adds.select(col("vec_id").cast("long"), col("cell").cast("long"))
-      .coalesce(1).write.parquet(staging.resolve("adds").toString)
-    tombs.select(col(tombs.columns.head).cast("long").as("vec_id"))
-      .coalesce(1).write.parquet(staging.resolve("tombs").toString)
-    StoreLayout.stageEpochTag(staging, epoch)
-    graft.core.CommitProtocol.publish(staging, Seq(staging -> dest)) {
-      Files.createFile(marker(dest)); ()
+      adds: DataFrame, tombs: DataFrame, epoch: Option[Long] = None): Unit =
+    StoreLayout.publishDelta(root, epoch) { staging =>
+      adds.select(col("vec_id").cast("long"), col("cell").cast("long"))
+        .coalesce(1).write.parquet(staging.resolve("adds").toString)
+      tombs.select(col(tombs.columns.head).cast("long").as("vec_id"))
+        .coalesce(1).write.parquet(staging.resolve("tombs").toString)
     }
-  }
 
   /** The composed live cell table at the current committed version.
     * Plan depth on long chains is bounded by the shared lineage-cut
-    * cadence ([[DedupIndex.ChainCutEvery]]). */
+    * cadence ([[StoreLayout.foldDeltas]]). */
   def cells(spark: SparkSession, root: Path): DataFrame = {
-    val base = requireBase(root)
-    var view = readDir(spark, base.resolve("cells"), cellSchema)
-    committedDeltas(base).zipWithIndex.foreach { case (d, i) =>
+    val base = StoreLayout.requireBase(root)
+    StoreLayout.foldDeltas(base,
+        readDir(spark, base.resolve("cells"), cellSchema)) { (view, d) =>
       val tombs = readDir(spark, d.resolve("tombs"), tombSchema)
       val adds = readDir(spark, d.resolve("adds"), cellSchema)
-      view = view.join(tombs, Seq("vec_id"), "left_anti").unionByName(adds)
-      if ((i + 1) % DedupIndex.ChainCutEvery == 0)
-        view = view.localCheckpoint(eager = false)
+      view.join(tombs, Seq("vec_id"), "left_anti").unionByName(adds)
     }
-    view
   }
 
-  /** Operational counters for the health face (q_index_health):
-    * (delta-chain length, base rows, Σ delta add rows, composed live
-    * rows). */
+  /** Health counters (q_index_health) on the cell grain
+    * ([[StoreLayout.healthCounts]]). */
   private[graft] def healthCounts(spark: SparkSession,
-      root: Path): (Long, Long, Long, Long) = {
-    val base = requireBase(root)
-    val deltas = committedDeltas(base)
-    // base/add counts from parquet footers (driver-side, no Spark job)
-    val nBase = StoreLayout.footerRowCount(spark, base.resolve("cells"))
-    val nAdds = deltas.map(d =>
-      StoreLayout.footerRowCount(spark, d.resolve("adds"))).sum
-    (deltas.size.toLong, nBase, nAdds, cells(spark, root).count())
-  }
+      root: Path): (Long, Long, Long, Long) =
+    StoreLayout.healthCounts(spark, root, "cells", "adds")(cells(spark, root))
 
   /** The committed centroid model of the current base, when one was
     * published with it ((cluster_id, cv) — kilobytes, the IVF model
     * artifact). */
   def model(spark: SparkSession, root: Path): Option[DataFrame] = {
-    val dir = requireBase(root).resolve("model")
+    val dir = StoreLayout.requireBase(root).resolve("model")
     if (Files.isDirectory(dir)) Some(readDir(spark, dir, modelSchema)) else None
   }
 
   /** True when the current committed base carries a centroid model. */
   private[graft] def hasModel(root: Path): Boolean =
-    currentBaseDir(root).exists(b => Files.isDirectory(b.resolve("model")))
+    StoreLayout.currentBaseDir(root).exists(b => Files.isDirectory(b.resolve("model")))
 
   /** Per-cell Lloyd residual with ENGINE-EXACT arithmetic (the
     * q_ivf_drift decimal discipline: 9-dp decimal component sums,

@@ -532,43 +532,19 @@ object Similarity {
     * stale mirror (valid marker, old model) is detected and rebuilt
     * instead of silently serving centroids learned from bytes that no
     * longer exist (review r8 — the staged frames already had this
-    * invalidation contract; the on-disk model needed it too).
+    * invalidation contract; the on-disk model needed it too); a
+    * marked-but-empty mirror reads stale too
+    * ([[graft.core.StoreLayout.sigCheckedArtifact]]).
     * Staging.invalidate(corpus) drops the memo, forcing re-verification
     * on next access. */
-  private[queries] def learnedCentroids(spark: SparkSession, sfDir: String): DataFrame =
-    graft.operators.Staging.memoized(spark, sfDir, "centroids-learned") {
-      import spark.implicits._
-      val path = learnedCentroidsPath(sfDir)
-      val sig = Tables.embeddings(spark, sfDir)
-        .agg(expr(CorpusSigSpark)).head().getLong(0)
-      this.synchronized {
-        val current = java.nio.file.Files.exists(path.resolve("_GRAFT_COMMITTED")) &&
-          spark.read.parquet(path.toString)
-            .select($"corpus_sig").head().getLong(0) == sig
-        if (!current) {
-          // staged OUTSIDE ann-centroids/ so the oracle's read_parquet
-          // glob can never observe half-written (or crash-residue)
-          // model files, then published through the shared protocol
-          // (which clears the stale mirror as destination residue)
-          java.nio.file.Files.deleteIfExists(path.resolve("_GRAFT_COMMITTED"))
-          val staging = path.getParent
-            .resolveSibling("ann-centroids-staging").resolve(path.getFileName)
-          graft.core.CommitProtocol.deleteRecursively(staging)
-          graft.operators.KMeans.fit(
-              graft.operators.KMeans.prep(
-                Tables.embeddings(spark, sfDir), "embedding", "vec_id"),
-              k = LearnedK, iters = LearnedIters)
-            .withColumn("corpus_sig", lit(sig))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(staging.toString)
-          graft.core.CommitProtocol.publish(staging, Seq(staging -> path)) {
-            java.nio.file.Files.createFile(path.resolve("_GRAFT_COMMITTED")); ()
-          }
-        }
-      }
-      spark.read.parquet(path.toString)
-        .select($"cluster_id".as("cid"), $"cv")
-    }
+  private[graft] def learnedCentroids(spark: SparkSession, sfDir: String): DataFrame =
+    graft.core.StoreLayout.sigCheckedArtifact(spark, sfDir, "ann-centroids",
+        Tables.embeddings(spark, sfDir), CorpusSigSpark) {
+      graft.operators.KMeans.fit(
+        graft.operators.KMeans.prep(
+          Tables.embeddings(spark, sfDir), "embedding", "vec_id"),
+        k = LearnedK, iters = LearnedIters)
+    }.select(col("cluster_id").as("cid"), col("cv"))
 
   /** Staged cell assignment under the LEARNED centroids — the shipped
     * IVF index table (the subset-centroid `corpusCells` stays for
@@ -1831,53 +1807,38 @@ object Similarity {
   // resurface AUDIT q_semantic_dedup_deletes reports that set; silent
   // re-admission is a policy the index must not invent).
   private[queries] def maintainedCellRoot(spark: SparkSession,
-      sfDir: String): java.nio.file.Path = {
-    import spark.implicits._
-    val root = graft.core.Scratch.dir("semantic-cells", sfDir)
-    graft.operators.Staging.memoized(spark, sfDir, "semantic-cell-index-built") {
-      // committed-state fast path with corpus-signature staleness
-      // detection (the learnedCentroids / Dedup.maintainedIndexRoot
-      // discipline); sig written LAST so a mid-build crash rebuilds
-      val sig = Tables.embeddings(spark, sfDir)
-        .agg(expr(CorpusSigSpark)).head().getLong(0)
-      val sigFile = root.resolve("_GRAFT_SIG")
-      val current =
-        SemanticIndex.isCommitted(root) &&
-        SemanticIndex.committedDeltaCount(root) == 2 &&
-        SemanticIndex.hasModel(root) &&
-        java.nio.file.Files.exists(sigFile) &&
-        java.nio.file.Files.readString(sigFile).trim == sig.toString
-      if (!current) {
-        java.nio.file.Files.deleteIfExists(sigFile)
-        val cc = corpusCells(spark, sfDir)
-        // the centroid MODEL publishes with the base (r17): the store
-        // carries the artifact its assignments were made under, so the
-        // drift monitor (q_index_health's residual / retrain_due) can
-        // read committed state instead of re-deriving the draw
-        SemanticIndex.writeBase(spark, root,
-          cc.filter($"vec_id" % SemArriveMod =!= SemArriveRem)
-            .select($"vec_id", $"cell"),
-          model = Some(subsetCentroids(corpusVectors(spark, sfDir))
-            .select($"cid".as("cluster_id"), $"cv")))
-        val admitted = cc
-          .filter($"vec_id" % SemArriveMod === SemArriveRem)
-          .select($"vec_id", $"cell")
-          .join(qSemanticDedupIncremental(spark, sfDir)
-            .select($"dropped_id".as("vec_id")), Seq("vec_id"), "left_anti")
-          .join(qSemanticArrivalPairs(spark, sfDir)
-            .select($"dropped_id".as("vec_id")), Seq("vec_id"), "left_anti")
-        SemanticIndex.applyMaintenance(spark, root, admitted,
-          tombs = spark.emptyDataset[Long].toDF("vec_id"))
-        val tombs = SemanticIndex.cells(spark, root)
-          .filter($"vec_id" % DeleteMod === DeleteRem).select($"vec_id")
-        SemanticIndex.applyMaintenance(spark, root,
-          spark.emptyDataset[(Long, Long)].toDF("vec_id", "cell"), tombs)
-        java.nio.file.Files.writeString(sigFile, sig.toString)
-      }
-      Seq(root.toString).toDF("root")
-    }.count()
-    root
-  }
+      sfDir: String): java.nio.file.Path =
+    // committed-state fast path with corpus-signature staleness
+    // detection (the learnedCentroids / Dedup.maintainedIndexRoot
+    // discipline); a base without its centroid model also rebuilds
+    graft.core.StoreLayout.maintainedRoot(spark, sfDir, "semantic-cells",
+      Tables.embeddings(spark, sfDir), CorpusSigSpark,
+      current = SemanticIndex.hasModel) { root =>
+      import spark.implicits._
+      val cc = corpusCells(spark, sfDir)
+      // the centroid MODEL publishes with the base (r17): the store
+      // carries the artifact its assignments were made under, so the
+      // drift monitor (q_index_health's residual / retrain_due) can
+      // read committed state instead of re-deriving the draw
+      SemanticIndex.writeBase(spark, root,
+        cc.filter($"vec_id" % SemArriveMod =!= SemArriveRem)
+          .select($"vec_id", $"cell"),
+        model = Some(subsetCentroids(corpusVectors(spark, sfDir))
+          .select($"cid".as("cluster_id"), $"cv")))
+      val admitted = cc
+        .filter($"vec_id" % SemArriveMod === SemArriveRem)
+        .select($"vec_id", $"cell")
+        .join(qSemanticDedupIncremental(spark, sfDir)
+          .select($"dropped_id".as("vec_id")), Seq("vec_id"), "left_anti")
+        .join(qSemanticArrivalPairs(spark, sfDir)
+          .select($"dropped_id".as("vec_id")), Seq("vec_id"), "left_anti")
+      SemanticIndex.applyMaintenance(spark, root, admitted,
+        tombs = spark.emptyDataset[Long].toDF("vec_id"))
+      val tombs = SemanticIndex.cells(spark, root)
+        .filter($"vec_id" % DeleteMod === DeleteRem).select($"vec_id")
+      SemanticIndex.applyMaintenance(spark, root,
+        spark.emptyDataset[(Long, Long)].toDF("vec_id", "cell"), tombs)
+    }
 
   /** Bench setup hook (the Dedup.prewarmIndex rationale). */
   def prewarmCellIndex(spark: SparkSession, sfDir: String): Unit = {

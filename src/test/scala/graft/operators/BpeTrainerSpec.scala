@@ -144,32 +144,41 @@ class BpeTrainerSpec extends SparkTestBase {
   }
 
   test("a marked-but-empty sidecar reads as stale and is rebuilt (review r10)") {
-    import spark.implicits._
     import scala.jdk.CollectionConverters._
-    val expected = BpeTrainer.committedMerges(spark, sfDir)
-      .as[(Int, String, String, String)].collect().toSeq.sortBy(_._1)
-    val path = BpeTrainer.mergesPath(sfDir)
-    // externally truncate: swap the data files for a ZERO-ROW file of the
-    // same schema while the commit marker stays in place
-    val schema = spark.read.parquet(path.toString).schema
-    val tmp = java.nio.file.Files.createTempDirectory("bpe-empty")
-    spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      .coalesce(1).write.mode("overwrite").parquet(tmp.resolve("d").toString)
-    val old = java.nio.file.Files.list(path).iterator().asScala.toList
-      .filter(_.getFileName.toString != "_GRAFT_COMMITTED")
-    old.foreach(graft.core.CommitProtocol.deleteRecursively)
-    java.nio.file.Files.list(tmp.resolve("d")).iterator().asScala.toList
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .foreach(p => java.nio.file.Files.copy(p, path.resolve(p.getFileName)))
-    assert(java.nio.file.Files.exists(path.resolve("_GRAFT_COMMITTED")))
-    // the memoized frame must not mask the on-disk corruption in this test
-    graft.operators.Staging.invalidate(Some(sfDir))
-    val rebuilt = BpeTrainer.committedMerges(spark, sfDir)
-      .as[(Int, String, String, String)].collect().toSeq.sortBy(_._1)
-    assert(rebuilt == expected,
-      "empty sidecar must be rebuilt to the trained list, not hard-fail")
-    graft.core.CommitProtocol.deleteRecursively(tmp)
+    import graft.queries.{Events, Similarity}
+    // every sig-checked model artifact, one row each: (kind, committed
+    // face, artifact dir)
+    val artifacts: Seq[(String, () => org.apache.spark.sql.DataFrame, java.nio.file.Path)] = Seq(
+      ("bpe-merges", () => BpeTrainer.committedMerges(spark, sfDir),
+        BpeTrainer.mergesPath(sfDir)),
+      ("ann-centroids", () => Similarity.learnedCentroids(spark, sfDir),
+        Similarity.learnedCentroidsPath(sfDir)),
+      ("journey-model", () => Events.committedJourneyEdges(spark, sfDir),
+        Events.journeyModelPath(sfDir)))
+    artifacts.foreach { case (kind, face, path) =>
+      def rows() = face().collect().map(_.toString).sorted.toSeq
+      val expected = rows()
+      assert(expected.nonEmpty, kind)
+      // externally truncate: swap the data files for a ZERO-ROW file of
+      // the same schema while the commit marker stays in place
+      val schema = spark.read.parquet(path.toString).schema
+      val tmp = java.nio.file.Files.createTempDirectory(s"$kind-empty")
+      spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+        .coalesce(1).write.mode("overwrite").parquet(tmp.resolve("d").toString)
+      val old = java.nio.file.Files.list(path).iterator().asScala.toList
+        .filter(_.getFileName.toString != "_GRAFT_COMMITTED")
+      old.foreach(graft.core.CommitProtocol.deleteRecursively)
+      java.nio.file.Files.list(tmp.resolve("d")).iterator().asScala.toList
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .foreach(p => java.nio.file.Files.copy(p, path.resolve(p.getFileName)))
+      assert(java.nio.file.Files.exists(path.resolve("_GRAFT_COMMITTED")), kind)
+      // the memoized frame must not mask the on-disk corruption here
+      graft.operators.Staging.invalidate(Some(sfDir))
+      assert(rows() == expected,
+        s"$kind: empty sidecar must be rebuilt to the trained model, not hard-fail")
+      graft.core.CommitProtocol.deleteRecursively(tmp)
+    }
   }
 
   test("the oracle's string-replace merge formulation equals the real encoder (property)") {

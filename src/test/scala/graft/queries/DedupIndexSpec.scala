@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkTestBase
+import graft.core.StoreLayout
 
 /** Invariant spec for the committed dedup index (judge r14 #2): apply
   * the maintenance legs to the committed label/keeper tables, then
@@ -104,7 +105,7 @@ class DedupIndexSpec extends SparkTestBase {
     assert(keeperSet() == Set((20L, 21L), (60L, 66L)))
     // the rebuild retired the delta chain — nothing left to compose —
     // and superseded base versions are garbage-collected
-    assert(DedupIndex.committedDeltaCount(root) == 0)
+    assert(StoreLayout.committedDeltaCount(root) == 0)
     val ds = java.nio.file.Files.list(root)
     try {
       val bases = ds.filter(_.getFileName.toString.startsWith("base-")).toArray
@@ -157,7 +158,7 @@ class DedupIndexSpec extends SparkTestBase {
       Seq((1L, 1L, d9("0.10")), (2L, 1L, d9("0.20")))
         .toDF("doc_id", "cluster_id", "qd"))
     // plant crash residue: a delta dir with data but NO marker
-    val residue = DedupIndex.currentBaseDir(root).get.resolve("delta=1")
+    val residue = StoreLayout.currentBaseDir(root).get.resolve("delta=1")
     java.nio.file.Files.createDirectories(residue.resolve("adds"))
     java.nio.file.Files.writeString(residue.resolve("adds").resolve("junk"), "x")
     def labelSet() = DedupIndex.labels(spark, root)
@@ -198,18 +199,18 @@ class DedupIndexSpec extends SparkTestBase {
     val crashed = root.resolve("base-2")
     java.nio.file.Files.createDirectories(crashed.resolve("labels"))
     java.nio.file.Files.writeString(crashed.resolve("labels").resolve("junk"), "x")
-    assert(DedupIndex.currentBaseDir(root).get.getFileName.toString == "base-1")
+    assert(StoreLayout.currentBaseDir(root).get.getFileName.toString == "base-1")
     assert(labelSet() == Set((1L, 1L), (2L, 1L), (6L, 1L)))
     // a replayed micro-batch with the same epoch folds NOTHING twice
-    assert(DedupIndex.appliedEpochs(root) == Set(7L))
+    assert(StoreLayout.appliedEpochs(root) == Set(7L))
     DedupIndex.applyMaintenance(spark, root,
       Seq((2L, 6L)).toDF("doc_a", "doc_b"), qd,
       deletes = spark.emptyDataset[Long].toDF("doc_id"), epoch = Some(7L))
-    assert(DedupIndex.committedDeltaCount(root) == 1)
+    assert(StoreLayout.committedDeltaCount(root) == 1)
     // the next real publish claims base-2, clearing the residue, and
     // retires base-1 only AFTER the new marker exists
     DedupIndex.compact(spark, root)
-    assert(DedupIndex.currentBaseDir(root).get.getFileName.toString == "base-2")
+    assert(StoreLayout.currentBaseDir(root).get.getFileName.toString == "base-2")
     assert(labelSet() == Set((1L, 1L), (2L, 1L), (6L, 1L)))
     assert(!java.nio.file.Files.exists(root.resolve("base-1")))
   }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkTestBase
+import graft.core.StoreLayout
 
 /** Spec for the index-health readout (judge r15 #6): the ONE
   * compaction policy flips past BOTH thresholds (chain length,
@@ -42,12 +43,12 @@ class IndexOpsSpec extends SparkTestBase {
       Seq((11L, 30L)).toDF("doc_a", "doc_b"), qd,
       spark.emptyDataset[Long].toDF("doc_id"), epoch = Some(7L))
     DedupIndex.compact(spark, dr)
-    assert(DedupIndex.appliedEpochs(dr) == Set(7L))
+    assert(StoreLayout.appliedEpochs(dr) == Set(7L))
     val labels = DedupIndex.labels(spark, dr).count()
     DedupIndex.applyMaintenance(spark, dr,
       Seq((11L, 30L)).toDF("doc_a", "doc_b"), qd,
       spark.emptyDataset[Long].toDF("doc_id"), epoch = Some(7L))
-    assert(DedupIndex.committedDeltaCount(dr) == 0)
+    assert(StoreLayout.committedDeltaCount(dr) == 0)
     assert(DedupIndex.labels(spark, dr).count() == labels)
 
     // semantic store
@@ -58,11 +59,11 @@ class IndexOpsSpec extends SparkTestBase {
       Seq((6L, 0L)).toDF("vec_id", "cell"),
       spark.emptyDataset[Long].toDF("vec_id"), epoch = Some(3L))
     SemanticIndex.compact(spark, sr)
-    assert(SemanticIndex.appliedEpochs(sr) == Set(3L))
+    assert(StoreLayout.appliedEpochs(sr) == Set(3L))
     SemanticIndex.applyMaintenance(spark, sr,
       Seq((6L, 0L)).toDF("vec_id", "cell"),
       spark.emptyDataset[Long].toDF("vec_id"), epoch = Some(3L))
-    assert(SemanticIndex.committedDeltaCount(sr) == 0)
+    assert(StoreLayout.committedDeltaCount(sr) == 0)
     assert(SemanticIndex.cells(spark, sr).count() == 2L)
 
     // postings store
@@ -73,11 +74,11 @@ class IndexOpsSpec extends SparkTestBase {
       Seq(("b", 6L, 1L, 1L)).toDF("term", "doc_id", "dl", "tf"),
       spark.emptyDataset[Long].toDF("doc_id"), epoch = Some(9L))
     PostingsIndex.compact(spark, pr)
-    assert(PostingsIndex.appliedEpochs(pr) == Set(9L))
+    assert(StoreLayout.appliedEpochs(pr) == Set(9L))
     PostingsIndex.applyMaintenance(spark, pr,
       Seq(("b", 6L, 1L, 1L)).toDF("term", "doc_id", "dl", "tf"),
       spark.emptyDataset[Long].toDF("doc_id"), epoch = Some(9L))
-    assert(PostingsIndex.committedDeltaCount(pr) == 0)
+    assert(StoreLayout.committedDeltaCount(pr) == 0)
     assert(PostingsIndex.stats(spark, pr).count() == 2L)
   }
 
@@ -125,9 +126,9 @@ class IndexOpsSpec extends SparkTestBase {
     val acted = IndexOps.autoCompact(Seq(store("hot", hot), store("cold", cold)))
     assert(acted == Map("hot" -> "compact", "cold" -> "none"), acted.toString)
     // the flagged store was physically folded, content unchanged
-    assert(SemanticIndex.committedDeltaCount(hot) == 0)
+    assert(StoreLayout.committedDeltaCount(hot) == 0)
     assert(SemanticIndex.cells(spark, hot).as[(Long, Long)].collect().toSet == view)
-    assert(SemanticIndex.committedDeltaCount(cold) == 1)
+    assert(StoreLayout.committedDeltaCount(cold) == 1)
     // idempotent: the sweep that just ran reset the counters it reads
     val again = IndexOps.autoCompact(Seq(store("hot", hot), store("cold", cold)))
     assert(again == Map("hot" -> "none", "cold" -> "none"), again.toString)
@@ -160,8 +161,7 @@ class IndexOpsSpec extends SparkTestBase {
       IndexOps.ManagedStore(name,
         () => SemanticIndex.healthCounts(spark, root),
         () => SemanticIndex.compact(spark, root),
-        retrainDue = () => IndexOps.minResidual(spark, root, vecs)
-          .exists(_.compareTo(IndexOps.RetrainResidualBar) < 0),
+        residual = () => IndexOps.minResidual(spark, root, vecs),
         retrain = () => SemanticIndex.retrainCompact(spark, root, vecs,
           k = 2, iters = 3))
     val before = IndexOps.minResidual(spark, drifted, vectors).get

@@ -55,7 +55,7 @@ class OrcMirrorSpec extends SparkTestBase {
     val stale = Files.createTempDirectory(destDir, "stage-")
     Files.writeString(stale.resolve("leftover"), "crashed writer")
     Files.setLastModifiedTime(stale, FileTime.fromMillis(
-      System.currentTimeMillis() - Scale.OrcStageTtlMs - 60000))
+      System.currentTimeMillis() - graft.core.StoreLayout.StageTtlMs - 60000))
 
     Scale.orcMirror(spark, sfDir)
 
@@ -73,7 +73,7 @@ class OrcMirrorSpec extends SparkTestBase {
     Files.writeString(inflight.resolve("_owner"),
       ProcessHandle.current().pid().toString)
     Files.setLastModifiedTime(inflight, FileTime.fromMillis(
-      System.currentTimeMillis() - Scale.OrcStageTtlMs - 60000))
+      System.currentTimeMillis() - graft.core.StoreLayout.StageTtlMs - 60000))
 
     Scale.orcMirror(spark, sfDir)
 
@@ -90,7 +90,7 @@ class OrcMirrorSpec extends SparkTestBase {
     // pid from far outside any plausible live range on this host
     Files.writeString(orphan.resolve("_owner"), "999999999")
     Files.setLastModifiedTime(orphan, FileTime.fromMillis(
-      System.currentTimeMillis() - Scale.OrcStageTtlMs - 60000))
+      System.currentTimeMillis() - graft.core.StoreLayout.StageTtlMs - 60000))
 
     Scale.orcMirror(spark, sfDir)
 
@@ -100,12 +100,12 @@ class OrcMirrorSpec extends SparkTestBase {
   test("stageOwnerAlive reads liveness from the _owner pid file") {
     wipeMirror()
     val dir = Files.createTempDirectory("stage-probe")
-    assert(!Scale.stageOwnerAlive(dir), "no _owner must read as not-alive")
+    assert(!graft.core.StoreLayout.stageOwnerAlive(dir), "no _owner must read as not-alive")
     Files.writeString(dir.resolve("_owner"), "not-a-pid")
-    assert(!Scale.stageOwnerAlive(dir), "garbage _owner must read as not-alive")
+    assert(!graft.core.StoreLayout.stageOwnerAlive(dir), "garbage _owner must read as not-alive")
     Files.writeString(dir.resolve("_owner"),
       ProcessHandle.current().pid().toString)
-    assert(Scale.stageOwnerAlive(dir), "own live pid must read as alive")
+    assert(graft.core.StoreLayout.stageOwnerAlive(dir), "own live pid must read as alive")
     graft.core.CommitProtocol.deleteRecursively(dir)
     // and the real build leaves a committed mirror behind as before
     Scale.orcMirror(spark, sfDir)

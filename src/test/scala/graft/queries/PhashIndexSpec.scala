@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkTestBase
+import graft.core.StoreLayout
 
 /** Invariant spec for the committed binary-modality fingerprint index
   * (judge r16 #1): both grains (aHash + frame fingerprints) publish
@@ -48,7 +49,7 @@ class PhashIndexSpec extends SparkTestBase {
     val before = (ph(), fr())
     PhashIndex.compact(spark, r)
     assert((ph(), fr()) == before)
-    assert(PhashIndex.committedDeltaCount(r) == 0)
+    assert(StoreLayout.committedDeltaCount(r) == 0)
     val ds = java.nio.file.Files.list(r)
     try {
       val bases = ds.filter(_.getFileName.toString.startsWith("base-")).toArray
@@ -66,18 +67,18 @@ class PhashIndexSpec extends SparkTestBase {
       Seq((6L, 600L)).toDF("asset_id", "h"),
       Seq((6L, "f6")).toDF("asset_id", "fh"),
       spark.emptyDataset[Long].toDF("asset_id"), epoch = Some(42L))
-    assert(PhashIndex.appliedEpochs(r) == Set(42L))
+    assert(StoreLayout.appliedEpochs(r) == Set(42L))
     // compaction publishes a fresh base with zero deltas — the epoch
     // set must carry forward or a post-compaction micro-batch replay
     // would re-fold (advisor r16)
     PhashIndex.compact(spark, r)
-    assert(PhashIndex.committedDeltaCount(r) == 0)
-    assert(PhashIndex.appliedEpochs(r) == Set(42L))
+    assert(StoreLayout.committedDeltaCount(r) == 0)
+    assert(StoreLayout.appliedEpochs(r) == Set(42L))
     PhashIndex.applyMaintenance(spark, r,
       Seq((6L, 600L)).toDF("asset_id", "h"),
       Seq((6L, "f6")).toDF("asset_id", "fh"),
       spark.emptyDataset[Long].toDF("asset_id"), epoch = Some(42L))
-    assert(PhashIndex.committedDeltaCount(r) == 0)
+    assert(StoreLayout.committedDeltaCount(r) == 0)
     assert(PhashIndex.phash(spark, r).count() == 2L)
   }
 

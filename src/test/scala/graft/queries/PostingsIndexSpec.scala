@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkTestBase
+import graft.core.StoreLayout
 
 /** Invariant spec for the committed retrieval index (judge r15 #1):
   * the maintenance legs' upsert/retraction deltas are APPLIED to a
@@ -59,7 +60,7 @@ class PostingsIndexSpec extends SparkTestBase {
     val before = (view(), stats(), corpus())
     PostingsIndex.compact(spark, root)
     assert((view(), stats(), corpus()) == before)
-    assert(PostingsIndex.committedDeltaCount(root) == 0)
+    assert(StoreLayout.committedDeltaCount(root) == 0)
     val ds = java.nio.file.Files.list(root)
     try {
       val bases = ds.filter(_.getFileName.toString.startsWith("base-")).toArray
@@ -96,7 +97,7 @@ class PostingsIndexSpec extends SparkTestBase {
     PostingsIndex.writeBase(spark, root,
       posting(1L, 1L, "a" -> 1L).toDF("term", "doc_id", "dl", "tf"))
     // crash residue: unmarked delta dir
-    val residue = PostingsIndex.currentBaseDir(root).get.resolve("delta=1")
+    val residue = StoreLayout.currentBaseDir(root).get.resolve("delta=1")
     java.nio.file.Files.createDirectories(residue.resolve("adds"))
     java.nio.file.Files.writeString(residue.resolve("adds").resolve("junk"), "x")
     assert(PostingsIndex.stats(spark, root)
@@ -109,7 +110,7 @@ class PostingsIndexSpec extends SparkTestBase {
     PostingsIndex.applyMaintenance(spark, root,
       adds = posting(6L, 1L, "b" -> 1L).toDF("term", "doc_id", "dl", "tf"),
       tombs = spark.emptyDataset[Long].toDF("doc_id"), epoch = Some(11L))
-    assert(PostingsIndex.committedDeltaCount(root) == 1)
+    assert(StoreLayout.committedDeltaCount(root) == 1)
     assert(PostingsIndex.stats(spark, root)
       .as[(String, Long, Long)].collect().toSet ==
       Set(("a", 1L, 1L), ("b", 1L, 1L)))
@@ -123,7 +124,7 @@ class PostingsIndexSpec extends SparkTestBase {
       .toDF("term", "doc_id", "dl", "tf")
     PostingsIndex.writeBase(spark, root, base)
     // the base landed partitioned by bucket on disk
-    val baseDir = PostingsIndex.currentBaseDir(root).get.resolve("postings")
+    val baseDir = StoreLayout.currentBaseDir(root).get.resolve("postings")
     val parts = {
       val ds = java.nio.file.Files.list(baseDir)
       try ds.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path]

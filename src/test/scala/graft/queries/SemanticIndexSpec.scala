@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkTestBase
+import graft.core.StoreLayout
 
 /** Invariant spec for the committed semantic cell index (judge r14 #2,
   * the semantic twins): adds and tombstones compose over the base,
@@ -33,7 +34,7 @@ class SemanticIndexSpec extends SparkTestBase {
     // superseded base versions garbage-collected
     SemanticIndex.compact(spark, root)
     assert(view() == Set((1L, 0L), (2L, 0L), (11L, 7L)))
-    assert(SemanticIndex.committedDeltaCount(root) == 0)
+    assert(StoreLayout.committedDeltaCount(root) == 0)
     val ds = java.nio.file.Files.list(root)
     try {
       val bases = ds.filter(_.getFileName.toString.startsWith("base-")).toArray
@@ -46,7 +47,7 @@ class SemanticIndexSpec extends SparkTestBase {
     val root = java.nio.file.Paths.get(tempDir("semidxres"), "cells")
     SemanticIndex.writeBase(spark, root,
       Seq((1L, 0L), (2L, 0L)).toDF("vec_id", "cell"))
-    val residue = SemanticIndex.currentBaseDir(root).get.resolve("delta=1")
+    val residue = StoreLayout.currentBaseDir(root).get.resolve("delta=1")
     java.nio.file.Files.createDirectories(residue.resolve("adds"))
     java.nio.file.Files.writeString(residue.resolve("adds").resolve("junk"), "x")
     def view() = SemanticIndex.cells(spark, root)
@@ -116,12 +117,12 @@ class SemanticIndexSpec extends SparkTestBase {
     SemanticIndex.applyMaintenance(spark, root,
       Seq((6L, 0L)).toDF("vec_id", "cell"),
       spark.emptyDataset[Long].toDF("vec_id"), epoch = Some(3L))
-    assert(SemanticIndex.appliedEpochs(root) == Set(3L))
+    assert(StoreLayout.appliedEpochs(root) == Set(3L))
     // replay: the same epoch is a no-op
     SemanticIndex.applyMaintenance(spark, root,
       Seq((6L, 0L)).toDF("vec_id", "cell"),
       spark.emptyDataset[Long].toDF("vec_id"), epoch = Some(3L))
-    assert(SemanticIndex.committedDeltaCount(root) == 1)
+    assert(StoreLayout.committedDeltaCount(root) == 1)
     assert(SemanticIndex.cells(spark, root).as[(Long, Long)].collect().toSet ==
       Set((1L, 0L), (6L, 0L)))
   }

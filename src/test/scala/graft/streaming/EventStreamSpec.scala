@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.SparkTestBase
+import graft.core.StoreLayout
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
@@ -1539,11 +1540,11 @@ class EventStreamSpec extends SparkTestBase {
     assert(keeperSet(rootStream) == keeperSet(rootBatch))
     // epochs recorded; a replayed micro-batch (post-crash restart) is a
     // no-op, not a duplicate fold
-    assert(DedupIndex.appliedEpochs(rootStream) == Set(0L, 1L, 2L))
-    val before = DedupIndex.committedDeltaCount(rootStream)
+    assert(StoreLayout.appliedEpochs(rootStream) == Set(0L, 1L, 2L))
+    val before = StoreLayout.committedDeltaCount(rootStream)
     EventStream.dedupMaintenanceBatch(rootStream, qd,
       Seq(("pair", 46L, 56L)).toDF("kind", "a", "b"), batchId = 0L)
-    assert(DedupIndex.committedDeltaCount(rootStream) == before)
+    assert(StoreLayout.committedDeltaCount(rootStream) == before)
     assert(labelSet(rootStream) == labelSet(rootBatch))
 
     // semantic twin: admitted adds + tombs over shuffled micro-batches
@@ -1566,10 +1567,10 @@ class EventStreamSpec extends SparkTestBase {
     def cellSet(root: java.nio.file.Path) = SemanticIndex.cells(spark, root)
       .as[(Long, Long)].collect().toSet
     assert(cellSet(semStream) == cellSet(semBatch))
-    assert(SemanticIndex.appliedEpochs(semStream) == Set(0L, 1L))
+    assert(StoreLayout.appliedEpochs(semStream) == Set(0L, 1L))
     EventStream.semanticMaintenanceBatch(semStream,
       Seq(("add", 16L, 7L)).toDF("kind", "vec_id", "cell"), batchId = 1L)
-    assert(SemanticIndex.committedDeltaCount(semStream) == 2)
+    assert(StoreLayout.committedDeltaCount(semStream) == 2)
   }
 
   test("postings and phash sinks fold micro-batches bit-equal to the one-shot apply") {
@@ -1613,12 +1614,12 @@ class EventStreamSpec extends SparkTestBase {
       .as[(Long, Long)].head() ==
       PostingsIndex.corpusStats(spark, pBatch).as[(Long, Long)].head())
     // epoch replay (post-crash restart) is a no-op, not a double fold
-    assert(PostingsIndex.appliedEpochs(pStream) == Set(0L, 1L))
-    val nDeltas = PostingsIndex.committedDeltaCount(pStream)
+    assert(StoreLayout.appliedEpochs(pStream) == Set(0L, 1L))
+    val nDeltas = StoreLayout.committedDeltaCount(pStream)
     EventStream.postingsMaintenanceBatch(pStream,
       Seq(("add", "e", 16L, 1L, 1L)).toDF("kind", "term", "doc_id", "dl", "tf"),
       batchId = 0L)
-    assert(PostingsIndex.committedDeltaCount(pStream) == nDeltas)
+    assert(StoreLayout.committedDeltaCount(pStream) == nDeltas)
     assert(stats(pStream) == stats(pBatch))
 
     // phash twin: both grains + tombs over shuffled micro-batches
@@ -1655,11 +1656,11 @@ class EventStreamSpec extends SparkTestBase {
     // one-shot by fx — assert the honest expectation per batch shape.
     assert(ph(hStream) == ph(hBatch))
     assert(fr(hStream) == Set((1L, "fa"), (16L, "fy")))
-    assert(PhashIndex.appliedEpochs(hStream) == Set(0L, 1L))
+    assert(StoreLayout.appliedEpochs(hStream) == Set(0L, 1L))
     EventStream.phashMaintenanceBatch(hStream,
       Seq(("tomb", 3L, 0L, "")).toDF("kind", "asset_id", "h", "fh"),
       batchId = 1L)
-    assert(PhashIndex.committedDeltaCount(hStream) == 2)
+    assert(StoreLayout.committedDeltaCount(hStream) == 2)
   }
 
   test("door scalar token count == batch column token count (one rule)") {
