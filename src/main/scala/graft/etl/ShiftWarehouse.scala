@@ -2,7 +2,10 @@ package graft.etl
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -21,9 +24,13 @@ import org.apache.spark.sql.types.StructType
   * commit markers and read exactly those batch directories.
   *
   * Scale: batches are append-only directories (`<table>/batch=<id>`) — no
-  * rewrite of existing data on ingest; constraint validation is a groupBy
-  * on the PK (shuffle of key column only) and can be disabled for trusted
-  * re-loads.
+  * rewrite of existing data on ingest. PK validation runs on the driver
+  * and adds no Spark job: each staged write observes its own keys
+  * (`Dataset.observe`), which are checked for NULLs, within-batch
+  * duplicates and duplicates against a committed-key set this instance
+  * keeps current (see [[keysFor]]). That set costs driver memory of one
+  * string per committed PK; bulk loads use `validatePks = false` and one
+  * [[validateAllPks]] at the end instead.
   */
 final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boolean = true) {
 
@@ -92,8 +99,8 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
       s"batch id '$batchId' collides with the <seq>.<id> marker grammar")
 
   /** Next commit sequence number: max committed + 1 (single-writer). */
-  private def nextSeq(): Long =
-    committedMarkers().map(_._1).filter(_.nonEmpty)
+  private def nextSeq(markers: Seq[(String, String)] = committedMarkers()): Long =
+    markers.map(_._1).filter(_.nonEmpty)
       .map(_.toLong).maxOption.getOrElse(0L) + 1
 
   private def committedBatchIds(): Seq[String] = committedMarkers().map(_._2)
@@ -140,9 +147,9 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
     NormalizedShifts(shifts, breaks, allowances, awardInterpretations)
 
   /** Atomically append one batch across the four normalized tables.
-    * Validates PK uniqueness (within batch and against committed data)
-    * before anything becomes visible; any failure discards the staging
-    * area — the reference's rollback. */
+    * Validates the PKs (not NULL, unique within the batch and against
+    * committed data) before anything becomes visible; any failure
+    * discards the staging area — the reference's rollback. */
   def appendBatch(batch: NormalizedShifts, batchId: String): Unit = {
     val tables = Seq(
       "shifts" -> batch.shifts,
@@ -205,7 +212,8 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
       s"delete keys for $name must be ${pkType.simpleString}, " +
         s"got ${keys.schema.fields.head.dataType.simpleString}")
     validateBatchId(batchId)
-    require(!committedBatchIds().contains(batchId), s"batch $batchId already committed")
+    val markers = committedMarkers()
+    require(!markers.exists(_._2 == batchId), s"batch $batchId already committed")
     val dest = tombstonesDir.resolve(name).resolve(s"batch=$batchId")
     val staging = stagingDir(batchId)
     try keys.toDF(pkColumns(name)).coalesce(1)
@@ -214,7 +222,7 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
     graft.core.CommitProtocol.publish(staging,
       Seq(staging.resolve("tombstones") -> dest)) {
       Files.createDirectories(commitsDir)
-      Files.createFile(commitsDir.resolve(f"${nextSeq()}%08d.$batchId"))
+      Files.createFile(commitsDir.resolve(f"${nextSeq(markers)}%08d.$batchId"))
       ()
     }
   }
@@ -329,15 +337,27 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
   private def appendTables(tables: Seq[(String, DataFrame)], batchId: String,
       crossBatchPkCheck: Boolean = true): Unit = {
     validateBatchId(batchId)
-    require(!committedBatchIds().contains(batchId), s"batch $batchId already committed")
+    // one listing serves the already-committed check, the key-set
+    // catch-up and the marker's sequence (single writer)
+    val markers = committedMarkers()
+    require(!markers.exists(_._2 == batchId), s"batch $batchId already committed")
+    val marker = (f"${nextSeq(markers)}%08d", batchId)
     val staging = stagingDir(batchId)
-    try {
-      tables.foreach { case (name, df) =>
-        df.write.mode("overwrite").parquet(staging.resolve(name).toString)
+    val validated = try {
+      val observed = tables.flatMap { case (name, df) =>
+        val obs = pkColumns.get(name).filter(_ => validatePks).map(_ -> Observation())
+        obs.fold(df) { case (pk, o) =>
+          df.observe(o, collect_list(col(pk)).as("keys"),
+            count(when(col(pk).isNull, 1)).as("nulls"))
+        }.write.mode("overwrite").parquet(staging.resolve(name).toString)
+        obs.map { case (pk, o) => (name, pk, o) }
       }
-      if (validatePks) tables.foreach { case (name, _) =>
-        pkColumns.get(name).foreach(pk =>
-          validatePk(name, pk, batchId, staging, crossBatchPkCheck))
+      if (observed.isEmpty) None
+      else {
+        val committed = keysFor(markers)
+        Some(committed -> observed.map { case (name, pk, o) =>
+          name -> checkedKeys(name, pk, o, committed(name), batchId, crossBatchPkCheck)
+        })
       }
     } catch {
       // a stage/validate failure discards the staging area — nothing
@@ -353,41 +373,64 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
         staging.resolve(name) -> rootPath.resolve(name).resolve(s"batch=$batchId")
       }) {
       Files.createDirectories(commitsDir)
-      Files.createFile(commitsDir.resolve(f"${nextSeq()}%08d.$batchId"))
+      Files.createFile(commitsDir.resolve(s"${marker._1}.$batchId"))
       ()
+    }
+    validated.foreach { case (committed, batchKeys) =>
+      knownKeys = committed.plus(Seq(marker), batchKeys)
     }
   }
 
-  /** PK uniqueness, two cheap phases (round-1 version unioned staged with
-    * the ENTIRE committed table and re-grouped — an O(total²) shuffle over
-    * a P-page run):
-    *  1. within-batch dups: groupBy over the small staged page only;
-    *  2. staged-vs-committed: broadcast the staged PKs (a page is always
-    *     small) and left-semi join against the committed PK column — a
-    *     pruned single-column scan of committed data, NO shuffle of it.
-    * Per-page cost is one committed-PK-column scan; for bulk re-loads use
-    * validatePks=false and one [[validateAllPks]] at the end (O(total)
-    * once instead of per page). */
-  private def validatePk(name: String, pk: String, batchId: String,
-      staging: Path, crossBatch: Boolean = true): Unit = {
-    val staged = spark.read.schema(tableSchemas(name)).parquet(staging.resolve(name).toString)
-    val withinDup = staged.select(pk)
-      .groupBy(col(pk)).count().filter(col("count") > 1).limit(1).collect()
-    if (withinDup.nonEmpty)
+  /** Committed PKs as of the last [[keysFor]] or commit of this instance. */
+  @volatile private var knownKeys = CommittedKeys.empty
+
+  /** Every committed PK per table, for the commit listing `markers`. The
+    * held set is reused while every marker it covers is still listed; a
+    * covered marker that is gone (`clear`, `compact`, `compactCurrent`,
+    * an external change) discards it. Markers not yet covered — first
+    * use on an existing root, batches another writer committed — are
+    * read with one PK-column scan of only their batch dirs. */
+  private def keysFor(markers: Seq[(String, String)]): CommittedKeys = {
+    val held = Some(knownKeys).filter(_.covered.subsetOf(markers.toSet))
+      .getOrElse(CommittedKeys.empty)
+    val missing = markers.filterNot(held.covered)
+    val scans = pkColumns.toSeq.flatMap { case (name, pk) =>
+      val dirs = missing.map(m => rootPath.resolve(name).resolve(s"batch=${m._2}"))
+        .filter(Files.isDirectory(_)).map(_.toString)
+      if (dirs.isEmpty) None
+      else Some(spark.read.schema(tableSchemas(name)).parquet(dirs: _*)
+        .where(col(pk).isNotNull).select(lit(name), col(pk)))
+    }
+    val found = scans.reduceOption(_ union _).toSeq.flatMap(_.collect())
+      .groupMap(_.getString(0))(_.getString(1))
+    knownKeys = held.plus(missing, found)
+    knownKeys
+  }
+
+  /** A staged write's observed keys, checked the way the reference's
+    * `PRIMARY KEY` columns are: not NULL, unique within the batch and,
+    * unless `crossBatch` is waived, not already committed. */
+  private def checkedKeys(name: String, pk: String, obs: Observation,
+      committed: Set[String], batchId: String, crossBatch: Boolean): Seq[String] = {
+    // bounded: an observation whose listener event is lost must fail the
+    // page, not hang the writer
+    val m = Await.result(obs.future, ObservationWait)
+    if (m.getAs[Long]("nulls") > 0)
       throw new IllegalStateException(
-        s"duplicate key value violates unique constraint: $name.$pk = ${withinDup.head.get(0)} (batch $batchId)")
-    if (!crossBatch) return
-    val crossDup = table(name).select(pk)
-      .join(broadcast(staged.select(pk)), Seq(pk), "left_semi")
-      .limit(1).collect()
-    if (crossDup.nonEmpty)
-      throw new IllegalStateException(
-        s"duplicate key value violates unique constraint: $name.$pk = ${crossDup.head.get(0)} (batch $batchId)")
+        s"""null value in column "$pk" of relation "$name" violates not-null constraint (batch $batchId)""")
+    val keys = m.getAs[scala.collection.Seq[String]]("keys").toSeq
+    val seen = scala.collection.mutable.HashSet.empty[String]
+    keys.find(k => !seen.add(k))
+      .orElse(if (crossBatch) keys.find(committed) else None)
+      .foreach(v => throw new IllegalStateException(
+        s"duplicate key value violates unique constraint: $name.$pk = $v (batch $batchId)"))
+    keys
   }
 
   /** One-shot global PK validation over everything committed — the
     * companion to validatePks=false bulk loads: one shuffle keyed by PK
-    * per table, instead of a per-page scan. Rows landed via
+    * per table, instead of a per-page check against a driver-held set of
+    * every committed key. Rows landed via
     * [[upsertBatch]] are excluded from the cross-batch uniqueness check:
     * a correction legitimately shares its PK with the row it supersedes
     * (its within-batch uniqueness was already enforced at commit), so
@@ -583,4 +626,22 @@ object ShiftWarehouse {
     * when the three publish paths were unified (review r8). */
   private[graft] def deleteRecursively(p: Path): Unit =
     graft.core.CommitProtocol.deleteRecursively(p)
+
+  private val ObservationWait = 2.minutes
+
+  /** Committed PKs per table, and the commit markers (seq, id) whose
+    * batches they include. */
+  private final case class CommittedKeys(
+      covered: Set[(String, String)], keys: Map[String, Set[String]]) {
+    def apply(table: String): Set[String] = keys.getOrElse(table, Set.empty)
+    def plus(markers: Seq[(String, String)],
+        batch: Iterable[(String, Iterable[String])]): CommittedKeys =
+      CommittedKeys(covered ++ markers, batch.foldLeft(keys) { case (m, (t, ks)) =>
+        m.updated(t, m.getOrElse(t, Set.empty[String]) ++ ks)
+      })
+  }
+
+  private object CommittedKeys {
+    val empty: CommittedKeys = CommittedKeys(Set.empty, Map.empty)
+  }
 }

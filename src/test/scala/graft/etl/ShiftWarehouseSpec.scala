@@ -40,6 +40,89 @@ class ShiftWarehouseSpec extends SparkTestBase {
     assert(wh.shifts.count() === 2) // first batch intact, second invisible
   }
 
+  test("a NULL primary key rolls the whole batch back as a not-null violation") {
+    val wh = new ShiftWarehouse(spark, tempDir("wh-null-pk"))
+    def rejected(json: String, id: String): String = {
+      val e = intercept[IllegalStateException] {
+        wh.appendBatch(ShiftNormalizer.normalize(PageSource.parsePage(spark, json)), id)
+      }
+      assert(wh.committedBatches.isEmpty && wh.shifts.count() == 0 && wh.breaks.count() == 0)
+      e.getMessage
+    }
+    def page(shifts: String*) = s"""{"results": [${shifts.mkString(", ")}]}"""
+    // one NULL key: the reference's UUID PRIMARY KEY rejects it
+    val noShiftId = ShiftFixtures.shiftA.replace(
+      "\"id\": \"b2b9437a-28df-4ec4-8e4a-2bbdc241330b\",", "")
+    assert(rejected(page(noShiftId, ShiftFixtures.shiftB), "b0") ==
+      "null value in column \"shift_id\" of relation \"shifts\" violates not-null constraint (batch b0)")
+    // two NULL keys are a not-null violation too, not a duplicate of null
+    def noBreakId(shift: String, id: String) = shift.replace("\"id\": \"" + id + "\",", "")
+    assert(rejected(page(
+      noBreakId(ShiftFixtures.shiftA, "16419f82-8b9d-4434-a465-e150bd9c66b3"),
+      noBreakId(ShiftFixtures.shiftB, "6142ea7d-17be-4111-9a2a-73ed562b0f79")), "b1") ==
+      "null value in column \"break_id\" of relation \"breaks\" violates not-null constraint (batch b1)")
+  }
+
+  /** Spark jobs `body` submits from this thread. The listener bus delivers
+    * events in order, so once a trailing sentinel job has been seen every
+    * job of `body` has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.jobs"
+    val tag = java.util.UUID.randomUUID.toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some(`tag`) => jobs.incrementAndGet()
+          case Some(t) if t == s"$tag-end" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      body
+      sc.setLocalProperty(key, s"$tag-end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+      jobs.get
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a page commit runs at most 5 Spark jobs; zero-row tables still validate") {
+    val wh = new ShiftWarehouse(spark, tempDir("wh-jobs"))
+    val gen = ShiftGenerator.generate(11L, LocalDate.parse("2024-01-01"), days = 14)
+    def commit(json: String, id: String): Unit = {
+      // the caller's cache, as ShiftsEtl.run holds it
+      val page = PageSource.parsePage(spark, json).persist()
+      try wh.appendBatch(ShiftNormalizer.normalize(page), id) finally page.unpersist()
+    }
+    commit(ShiftGenerator.pageJson(gen, 0, 7), "p0")
+    val jobs = jobsOf(commit(ShiftGenerator.pageJson(gen, 7, 7), "p1"))
+    assert(jobs <= 5, s"second page commit ran $jobs jobs")
+    assert(wh.shifts.count() == 14)
+
+    // shifts with no breaks, allowances or awards: three zero-row writes
+    // whose observations must still arrive
+    val bare = ShiftGenerator.generate(12L, LocalDate.parse("2024-02-01"), days = 3)
+      .map(_.copy(breaks = Nil, allowances = Nil, award_interpretations = Nil))
+    val breaks = wh.breaks.count()
+    commit(ShiftGenerator.pageJson(bare, 0, 3), "p2")
+    assert(wh.shifts.count() == 17 && wh.breaks.count() == breaks)
+    intercept[IllegalStateException](commit(ShiftGenerator.pageJson(bare, 0, 3), "p3"))
+    // upserts of zero rows and of one row commit; both are observed
+    wh.upsertBatch("shifts", wh.shifts.filter(org.apache.spark.sql.functions.lit(false)), "u0")
+    wh.upsertBatch("shifts", wh.shifts.limit(1), "u1")
+    assert(wh.committedBatches.takeRight(2) == Seq("u0", "u1"))
+    assert(wh.currentView("shifts").count() == 17)
+  }
+
   test("as-of snapshot reads are stable as later batches land") {
     // validatePks=false so the same fixture page can land twice
     val wh = new ShiftWarehouse(spark, tempDir("wh-snap"), validatePks = false)
