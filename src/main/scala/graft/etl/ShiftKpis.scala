@@ -34,16 +34,6 @@ object ShiftKpis {
         lit(java.sql.Date.valueOf(asOfDate)).as("kpi_date"),
         col("kpi_value"))
 
-  /** Q1 `mean_break_length_in_minutes`: AVG(finish-start) in minutes, 0 if no breaks. */
-  def meanBreakLength(breaks: DataFrame, asOfDate: LocalDate): DataFrame =
-    kpiRow(breaks, "mean_break_length_in_minutes", asOfDate,
-      coalesce(avg(secondsBetween(col("break_start"), col("break_finish"))) / 60, lit(0)))
-
-  /** Q2 `mean_shift_cost`: AVG(shift_cost), 0 if no shifts. */
-  def meanShiftCost(shifts: DataFrame, asOfDate: LocalDate): DataFrame =
-    kpiRow(shifts, "mean_shift_cost", asOfDate,
-      coalesce(avg(col("shift_cost")), lit(0)))
-
   /** Q3 `max_allowance_cost_14d`: MAX(allowance_cost) over allowances ⋈ shifts
     * within 14 days before asOfDate. The date-filtered shifts side is tiny →
     * broadcast, so the fact side never shuffles. */
@@ -84,16 +74,6 @@ object ShiftKpis {
     kpiRow(top, "max_break_free_shift_period_in_days", asOfDate, max(col("cnt")))
   }
 
-  /** Q5 `min_shift_length_in_hours`: MIN(finish-start) in hours, 0 if none. */
-  def minShiftLength(shifts: DataFrame, asOfDate: LocalDate): DataFrame =
-    kpiRow(shifts, "min_shift_length_in_hours", asOfDate,
-      coalesce(min(secondsBetween(col("shift_start"), col("shift_finish"))) / 3600, lit(0)))
-
-  /** Q6 `total_number_of_paid_breaks`: COUNT(*) WHERE is_paid. */
-  def totalPaidBreaks(breaks: DataFrame, asOfDate: LocalDate): DataFrame =
-    kpiRow(breaks.filter(col("is_paid")), "total_number_of_paid_breaks", asOfDate,
-      count(lit(1)))
-
   /** Unpivot a 1-row multi-aggregate into tall KPI rows. */
   private def unpivot(agg1row: DataFrame, asOfDate: LocalDate, names: Seq[String]): DataFrame = {
     val stackArgs = names.map(n => s"'$n', `$n`").mkString(", ")
@@ -106,9 +86,12 @@ object ShiftKpis {
   /** All six KPIs. The four whole-table scalar KPIs are computed as ONE
     * multi-aggregate pass per source table (breaks once, shifts once) and
     * unpivoted — not one scan per KPI; at 100 TB that halves the fact
-    * scans. Q3 (join) and Q4 (islands window) keep their own plans. The
-    * per-KPI methods above remain the single-KPI API and the golden-test
-    * surface; this composition produces identical rows. */
+    * scans: Q1 `mean_break_length_in_minutes` (AVG(finish-start) in
+    * minutes) and Q6 `total_number_of_paid_breaks` (COUNT WHERE is_paid)
+    * over breaks, Q2 `mean_shift_cost` (AVG) and Q5
+    * `min_shift_length_in_hours` (MIN(finish-start) in hours) over
+    * shifts; an empty table gives 0. Q3 (join) and Q4 (islands window)
+    * keep their own plans. */
   def all(tables: NormalizedShifts, asOfDate: LocalDate): DataFrame = {
     val breaksAgg = tables.breaks.agg(
       coalesce(avg(secondsBetween(col("break_start"), col("break_finish"))) / 60, lit(0))

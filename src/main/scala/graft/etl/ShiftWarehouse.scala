@@ -9,6 +9,8 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.core.CommitProtocol.deleteRecursively
+
 /** Transactional batch warehouse over parquet.
   *
   * Reproduces the reference's per-page all-or-nothing load semantics
@@ -620,12 +622,6 @@ object ShiftWarehouse {
     "breaks" -> "break_id",
     "allowances" -> "allowance_id",
     "award_interpretations" -> "award_id")
-
-  /** Forwarded to the shared publish protocol's implementation — the
-    * warehouse's original copy moved to [[graft.core.CommitProtocol]]
-    * when the three publish paths were unified (review r8). */
-  private[graft] def deleteRecursively(p: Path): Unit =
-    graft.core.CommitProtocol.deleteRecursively(p)
 
   private val ObservationWait = 2.minutes
 

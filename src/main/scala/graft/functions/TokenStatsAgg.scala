@@ -13,8 +13,8 @@ case class TokenStatsOut(n_docs: Long, total_tokens: Long, max_tokens: Long,
 
 /** Typed `Aggregator[IN, BUF, OUT]` — the user-facing strongly-typed
   * aggregation API (SURVEY §2.10's anticipated extension surface;
-  * contrast with the Catalyst-level TypedImperativeAggregates MinHashAgg
-  * and CountMinAgg). Computes per-group token statistics over documents:
+  * contrast with the Catalyst-level TypedImperativeAggregate
+  * CountMinAgg). Computes per-group token statistics over documents:
   * doc count, total/max token counts, and mean tokens per doc.
   *
   * The buffer is exact longs and the single final division is

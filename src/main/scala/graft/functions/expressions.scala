@@ -51,9 +51,7 @@ case class MinHashSig(child: Expression, numHashes: Int)
 object MinHashSig {
   val MaxHashes = 512
 
-  /** Deterministic affine-rehash constants (odd multipliers) — shared
-    * with [[MinHashAgg]] so the scalar and aggregate forms produce
-    * identical signatures. */
+  /** Deterministic affine-rehash constants (odd multipliers). */
   private val (mulA, addB) = {
     var s = 0x9e3779b97f4a7c15L
     def next(): Long = { s = s * 6364136223846793005L + 1442695040888963407L; s }
@@ -61,9 +59,6 @@ object MinHashSig {
     val b = Array.fill(MaxHashes)(next())
     (a, b)
   }
-
-  private[functions] def rehashMul(j: Int): Long = mulA(j)
-  private[functions] def rehashAdd(j: Int): Long = addB(j)
 
   def compute(arr: ArrayData, k: Int): ArrayData = {
     val mins = Array.fill(k)(Long.MaxValue)

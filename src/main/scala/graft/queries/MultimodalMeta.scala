@@ -5,13 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 
-/** Driver-visible slice of the multimodal surface (graft.multimodal):
-  * binary-payload metadata extraction expressed with engine-portable
-  * operations (byte length + md5-derived fake dimensions), so the DuckDB
-  * oracle verifies the plumbing — payload bytes in, typed metadata out —
-  * without needing a codec on either side. The batched mapPartitions
-  * decode path (which a SQL oracle cannot express) is unit-tested in
-  * MultimodalSpec instead.
+/** The multimodal surface: binary-payload metadata extraction expressed
+  * with engine-portable operations (byte length + md5-derived stand-in
+  * dimensions), so the DuckDB oracle verifies the plumbing — payload
+  * bytes in, typed metadata out — without needing a codec on either
+  * side.
   */
 object MultimodalMeta {
 
@@ -77,8 +75,8 @@ object MultimodalMeta {
   // pipeline (decode → fixed-dim feature vector → distance → top-k),
   // with an engine-portable "feature extractor" standing in for the
   // codec: 8 per-byte frequencies computed by length/replace arithmetic
-  // (a real deployment swaps ONLY the extractor stage for the batched
-  // decoder in graft.multimodal — the plan downstream is identical).
+  // (a real deployment swaps ONLY the extractor stage for a codec —
+  // the plan downstream is identical).
   // Probe = asset 0's vector (1 row, broadcast); distance = squared L2
   // written LONGHAND so both engines evaluate the identical
   // left-to-right float expression; output is rank-only (ids, no

@@ -53,7 +53,7 @@ object PartitionedCorpus {
           // mirror first — use theirs, drop ours
           case _: java.nio.file.FileAlreadyExistsException |
                _: java.nio.file.DirectoryNotEmptyException =>
-            graft.etl.ShiftWarehouse.deleteRecursively(tmp)
+            graft.core.CommitProtocol.deleteRecursively(tmp)
         }
       }
     }

@@ -1,46 +1,14 @@
-package graft.multimodal
+package graft.queries
 
 import graft.SparkTestBase
 
-/** Multimodal plumbing specs: asset schema, batched decode execution,
-  * determinism. The metadata arithmetic itself is oracle-verified via
-  * queries.MultimodalMeta (q_asset_meta). */
-class MultimodalSpec extends SparkTestBase {
+/** Multimodal face specs: the ahash60 kernel, and the MultimodalMeta
+  * phash, frame and cross-modal faces against plain-Scala recomputes and
+  * their plan shapes. The metadata arithmetic itself is oracle-verified
+  * (q_asset_meta). */
+class MultimodalMetaSpec extends SparkTestBase {
 
   private val sfDir = "/root/testdata/sf0.001"
-
-  test("asset table exposes opaque binary payloads with mime metadata") {
-    val df = Multimodal.assets(spark, sfDir)
-    assert(df.schema.map(f => (f.name, f.dataType.typeName)) == Seq(
-      "asset_id" -> "long", "mime" -> "string", "payload" -> "binary"))
-    assert(df.count() > 0)
-  }
-
-  test("batched decode preserves cardinality and is deterministic") {
-    val meta1 = Multimodal.extractMeta(Multimodal.assets(spark, sfDir)).collect()
-    val meta2 = Multimodal.extractMeta(Multimodal.assets(spark, sfDir)).collect()
-    assert(meta1.length == Multimodal.assets(spark, sfDir).count())
-    assert(meta1.map(m => m.asset_id -> ((m.width, m.height))).toMap ==
-      meta2.map(m => m.asset_id -> ((m.width, m.height))).toMap)
-    meta1.foreach { m =>
-      assert(m.width >= 64 && m.width < 64 + 897)
-      assert(m.height >= 64 && m.height < 64 + 457)
-      assert(m.n_bytes > 0)
-    }
-  }
-
-  test("batched resize shrinks payload and dims, binary in binary out") {
-    val resized = Multimodal.resizeAssets(Multimodal.assets(spark, sfDir)).collect()
-    val orig = Multimodal.extractMeta(Multimodal.assets(spark, sfDir))
-      .collect().map(m => m.asset_id -> m).toMap
-    assert(resized.length == orig.size)
-    resized.foreach { r =>
-      val o = orig(r.asset_id)
-      assert(r.payload.length == math.max(1, o.n_bytes.toInt / 4))
-      assert(r.width == math.max(1, o.width / 2))
-      assert(r.height == math.max(1, o.height / 2))
-    }
-  }
 
   test("ahash60 kernel: block-average bits, exact integer compare") {
     import graft.functions.AHash60
@@ -309,123 +277,5 @@ class MultimodalSpec extends SparkTestBase {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"), plan)
-  }
-
-  test("PPM decode: the committed golden fixture yields real pixel planes") {
-    // the golden fixture is a COMMITTED file (src/test/resources), its
-    // expected values derived independently of the decoder (judge r14
-    // #6: real pixel planes, not the deterministic fake)
-    val bytes = {
-      val in = getClass.getResourceAsStream("/golden_16x8.ppm")
-      try in.readAllBytes() finally in.close()
-    }
-    val img = PpmDecoder.decode(bytes).get
-    assert((img.width, img.height) == ((16, 8)))
-    assert(img.rgb.length == 16 * 8 * 3)
-    // pixel (x,y) = (15x, 31y, 7(x+y)) — spot-check corners via the
-    // raster, then the exact Rec.601 luma plane golden values
-    val g = img.gray
-    assert(g(0) == 0)                    // (0,0): black
-    assert((g(15) & 0xff) == 79, g(15) & 0xff)          // (15,0)
-    assert((g(7 * 16) & 0xff) == 132)    // (0,7)
-    assert((g(7 * 16 + 15) & 0xff) == 212)  // (15,7)
-    assert(g.map(_ & 0xff).sum == 13524) // whole-plane golden checksum
-    // the decoder dispatch is live in the pipeline: extractMeta reports
-    // the REAL dimensions for a PPM payload, the fake for text bytes
-    import spark.implicits._
-    val assets = Seq((1L, "image/x-portable-pixmap", bytes),
-      (2L, "image/x-fake", "not a ppm at all".getBytes("UTF-8")))
-      .toDF("asset_id", "mime", "payload")
-    val meta = Multimodal.extractMeta(assets).collect()
-      .map(m => m.asset_id -> ((m.width, m.height))).toMap
-    assert(meta(1L) == ((16, 8)))
-    assert(meta(2L) == Multimodal.DecodeStub.fakeDims(
-      "not a ppm at all".getBytes("UTF-8")))
-  }
-
-  test("PPM: byte-different encodings of one image share a perceptual hash") {
-    // the point of hashing PIXELS instead of payload bytes: a re-encoded
-    // copy (different header spelling, same raster) must fingerprint
-    // identically, which the byte-plane stand-in could never promise
-    import spark.implicits._
-    val bytes = {
-      val in = getClass.getResourceAsStream("/golden_16x8.ppm")
-      try in.readAllBytes() finally in.close()
-    }
-    val img = PpmDecoder.decode(bytes).get
-    val alt = ("P6\n# another spelling of the same image\n 16\t8\n255\n"
-      .getBytes("US-ASCII")) ++ img.rgb
-    val img2 = PpmDecoder.decode(alt).get
-    assert(img.gray.toSeq == img2.gray.toSeq)
-    val hashes = Seq(img.gray, img2.gray).toDF("p")
-      .select(graft.functions.functions.ahash60($"p").as("h"))
-      .as[Long].collect()
-    assert(hashes(0) == hashes(1), hashes.mkString(", "))
-    // and a genuinely different image does not collide
-    val other = PpmDecoder.decode(
-      ("P6\n16 8\n255\n".getBytes("US-ASCII")) ++
-        Array.tabulate(16 * 8 * 3)(i => ((i * 37) % 251).toByte)).get
-    val hOther = Seq(other.gray).toDF("p")
-      .select(graft.functions.functions.ahash60($"p").as("h"))
-      .as[Long].collect().head
-    assert(hOther != hashes(0))
-  }
-
-  test("PPM resize is a real box-average downsample, round-tripped") {
-    val bytes = {
-      val in = getClass.getResourceAsStream("/golden_16x8.ppm")
-      try in.readAllBytes() finally in.close()
-    }
-    import spark.implicits._
-    val assets = Seq((7L, "image/x-portable-pixmap", bytes))
-      .toDF("asset_id", "mime", "payload")
-    val out = Multimodal.resizeAssets(assets).collect()
-    assert(out.length == 1)
-    val r = out.head
-    assert((r.width, r.height) == ((8, 4)))
-    // output is a VALID P6 payload whose (0,0) block is the exact 2×2
-    // integer box average of the source corner: rgb = (7, 15, 7)
-    val half = PpmDecoder.decode(r.payload).get
-    assert((half.width, half.height) == ((8, 4)))
-    assert((half.rgb(0) & 0xff, half.rgb(1) & 0xff, half.rgb(2) & 0xff)
-      == ((7, 15, 7)))
-  }
-
-  test("PPM decoder properties: roundtrip, strictness, halve geometry") {
-    // encode∘decode is the identity on canonical payloads
-    val img = PpmDecoder.Image(3, 2,
-      Array.tabulate(3 * 2 * 3)(i => ((i * 41) % 256).toByte))
-    val rt = PpmDecoder.decode(PpmDecoder.encode(img)).get
-    assert((rt.width, rt.height) == ((3, 2)) && rt.rgb.toSeq == img.rgb.toSeq)
-    // strictness: truncated raster, 16-bit maxval, wrong magic, zero
-    // dims, junk header — all None, never a mis-decode or a throw
-    val ok = PpmDecoder.encode(img)
-    assert(PpmDecoder.decode(ok.dropRight(1)).isEmpty, "truncated raster")
-    assert(PpmDecoder.decode((ok :+ 0.toByte)).isEmpty, "trailing junk")
-    assert(PpmDecoder.decode("P6\n3 2\n65535\n".getBytes("US-ASCII")
-      ++ new Array[Byte](3 * 2 * 6)).isEmpty, "16-bit samples")
-    assert(PpmDecoder.decode("P5\n3 2\n255\n".getBytes("US-ASCII")
-      ++ new Array[Byte](6)).isEmpty, "wrong magic")
-    assert(PpmDecoder.decode("P6\n0 2\n255\n ".getBytes("US-ASCII")).isEmpty)
-    assert(PpmDecoder.decode("P6\nx y\n255\n ".getBytes("US-ASCII")).isEmpty)
-    assert(PpmDecoder.decode(Array.empty[Byte]).isEmpty)
-    // halve geometry: odd dimensions fold the trailing row/column into
-    // a smaller box instead of reading out of bounds
-    val odd = PpmDecoder.Image(3, 3,
-      Array.tabulate(3 * 3 * 3)(i => ((i * 7) % 256).toByte))
-    val h = PpmDecoder.halve(odd)
-    assert((h.width, h.height) == ((1, 1)) && h.rgb.length == 3)
-    // a uniform image halves to the same uniform color exactly
-    val flat = PpmDecoder.Image(4, 4, Array.fill(4 * 4 * 3)(100.toByte))
-    assert(PpmDecoder.halve(flat).rgb.forall(_ == 100.toByte))
-  }
-
-  test("decode batches are bounded by BatchSize") {
-    val sizes = scala.collection.mutable.ArrayBuffer.empty[Int]
-    (1 to 150).grouped(Multimodal.DecodeStub.BatchSize).foreach(g => sizes += g.size)
-    assert(sizes.forall(_ <= Multimodal.DecodeStub.BatchSize))
-    // decodeBatch output aligns 1:1 with its input batch
-    val out = Multimodal.DecodeStub.decodeBatch(Seq(Array[Byte](1, 2), Array[Byte](3)))
-    assert(out.length == 2)
   }
 }
