@@ -31,10 +31,9 @@ import graft.core.CommitProtocol.deleteRecursively
   * (`Dataset.observe`), which are checked for NULLs, within-batch
   * duplicates and duplicates against a committed-key set this instance
   * keeps current (see [[keysFor]]). That set costs driver memory of one
-  * string per committed PK; bulk loads use `validatePks = false` and one
-  * [[validateAllPks]] at the end instead.
+  * string per committed PK.
   */
-final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boolean = true) {
+final class ShiftWarehouse(spark: SparkSession, root: String) {
 
   import ShiftWarehouse._
 
@@ -45,47 +44,21 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
   /** Commit markers are `<seq>.<batchId>` with a zero-padded monotonic
     * sequence assigned at commit time: COMMIT order, not batch-id
     * lexicographic order, defines the history. (Round-4 review finding:
-    * id schemes like `run-p00001`/`run-kpis` don't sort in commit order,
-    * which silently broke as-of snapshots keyed on id sorting.) Markers
-    * written by the pre-sequence layout (bare batch id) are still read,
-    * treated as sequence-less and ordered first by name. A legacy bare id
-    * that itself LOOKS sequenced (e.g. `20240101.nightly`) is
-    * disambiguated by checking that the parsed id's batch directory
-    * actually exists — otherwise the truncated id would miss its
-    * `batch=<id>` dirs and the batch's data would silently disappear
-    * from every read (ADVICE r5). New ids that would collide with the
-    * marker grammar are rejected at append time. */
+    * id schemes like `run-p00001`/`run-kpis` don't sort in commit order.)
+    * A marker outside this grammar is an error, never guessed at. New
+    * ids that would collide with the grammar are rejected at append
+    * time. */
   private def committedMarkers(): Seq[(String, String)] =
-    listDir(commitsDir).map(_.getFileName.toString).sorted
-      .map(parseMarker).sortBy(_._1)
+    listDir(commitsDir).map(_.getFileName.toString).sorted.map(parseMarker)
 
-  /** Marker-name → (seq, id), memoized: markers are immutable once
-    * written, and the legacy disambiguation below stats up to 5 batch
-    * dirs per marker — without the memo every table read would pay
-    * O(markers × tables) filesystem stats (review r6). */
-  private val markerParse =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
-  private def parseMarker(n: String): (String, String) =
-    markerParse.getOrElseUpdate(n, n.split("\\.", 2) match {
-      // A name whose FULL form owns a batch directory is a legacy bare
-      // id, even if its prefix looks like a sequence — preferring the
-      // full-name dir also kills the double-read a seq-parse would cause
-      // when the truncated id collides with another batch's dir
-      // (review r6).
-      case Array(seq, id) if seq.length == 8 && seq.forall(_.isDigit) &&
-        !batchDirExists(n) => (seq, id)
-      case _ => ("", n)
-    })
-
-  /** Does any table carry data for this batch id? Used only to
-    * disambiguate legacy (pre-sequence) markers from sequenced ones. */
-  private def batchDirExists(id: String): Boolean =
-    tableSchemas.keys.exists(t =>
-      Files.isDirectory(rootPath.resolve(t).resolve(s"batch=$id")))
+  private def parseMarker(n: String): (String, String) = n.split("\\.", 2) match {
+    case Array(seq, id) if seq.length == 8 && seq.forall(_.isDigit) => (seq, id)
+    case _ => throw new IllegalStateException(
+      s"commit marker '$n' in $commitsDir is not <8-digit seq>.<batch id>")
+  }
 
   /** List a directory's entries (empty for a non-directory), with the
-    * stream closed — the pattern appendTables/compact/markers all need. */
+    * stream closed — the marker listing and compact both need it. */
   private def listDir(p: Path): Seq[Path] =
     if (!Files.isDirectory(p)) Seq.empty
     else {
@@ -102,36 +75,16 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
 
   /** Next commit sequence number: max committed + 1 (single-writer). */
   private def nextSeq(markers: Seq[(String, String)] = committedMarkers()): Long =
-    markers.map(_._1).filter(_.nonEmpty)
-      .map(_.toLong).maxOption.getOrElse(0L) + 1
+    markers.map(_._1.toLong).maxOption.getOrElse(0L) + 1
 
-  private def committedBatchIds(): Seq[String] = committedMarkers().map(_._2)
+  /** Committed batch ids, in commit order. */
+  private[graft] def committedBatches: Seq[String] = committedMarkers().map(_._2)
 
   /** Read one normalized table (committed batches only). Empty-but-typed
     * DataFrame when nothing has been committed. */
-  def table(name: String): DataFrame = tableFor(name, committedBatchIds())
-
-  /** Snapshot read: the table AS OF a committed batch id — exactly the
-    * batches committed at or before it, in COMMIT order (the sequence
-    * stamped on the marker, independent of how batch ids sort). Batches
-    * are append-only and markers immutable, so a snapshot is
-    * reproducible forever: the same asOf reads the same bytes regardless
-    * of how many batches landed since — the training-data
-    * reproducibility contract ("the corpus as of snapshot X") that
-    * ingest-time mutation cannot give. Cost is identical to a current
-    * read: the pruning happens on the marker listing, no data is scanned
-    * to decide membership. An id that was never committed is an error,
-    * not a silent partial snapshot. */
-  def tableAsOf(name: String, asOf: String): DataFrame = {
-    val ids = committedBatchIds()
-    val cut = ids.indexOf(asOf)
-    require(cut >= 0, s"batch id '$asOf' was never committed")
-    tableFor(name, ids.take(cut + 1))
-  }
-
-  private def tableFor(name: String, batchIds: Seq[String]): DataFrame = {
+  def table(name: String): DataFrame = {
     val schema = tableSchemas(name)
-    val dirs = batchIds
+    val dirs = committedBatches
       .map(b => rootPath.resolve(name).resolve(s"batch=$b"))
       .filter(Files.isDirectory(_))
       .map(_.toString)
@@ -165,179 +118,7 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
   def appendKpis(kpiRows: DataFrame, batchId: String): Unit =
     appendTables(Seq("kpis" -> kpiRows), batchId)
 
-  /** Upsert one PK'd table: rows whose PK already exists in committed
-    * data REPLACE the old row in [[currentView]] reads — merge-on-read.
-    * Storage stays append-only (the old rows keep living in their
-    * original batches), so [[tableAsOf]] snapshots still see pre-upsert
-    * history; only the read-time winner changes. Within-batch PK
-    * uniqueness is still enforced; the cross-batch check is waived
-    * because replacement is the point. The batch is flagged in
-    * `_upserts/` so [[validateAllPks]] can tell a correction from an
-    * accidental double-insert and [[compact]] knows plain bag
-    * compaction would lose the replacement order. */
-  def upsertBatch(name: String, df: DataFrame, batchId: String): Unit = {
-    require(pkColumns.contains(name), s"table $name has no PK to upsert on")
-    validateBatchId(batchId)
-    // flag BEFORE the commit marker: a flag for a batch that never
-    // commits is inert residue, while the reverse order could leave a
-    // committed upsert looking like an append after a crash
-    Files.createDirectories(upsertsDir)
-    val flag = upsertsDir.resolve(batchId)
-    if (!Files.exists(flag)) Files.createFile(flag)
-    appendTables(Seq(name -> df), batchId, crossBatchPkCheck = false)
-  }
-
-  private def upsertsDir: Path = rootPath.resolve("_upserts")
-
-  /** Tombstone a set of PKs — the scoped merge-on-read DELETE that
-    * [[clear]]'s drop-everything cascade can't express (the "remove
-    * these documents from the corpus" obligation). The keys land as a
-    * tombstone batch under the same commit marker protocol, so deletion
-    * is ordered against every other mutation: a row is dead in
-    * [[currentView]] iff a tombstone with a LATER commit seq covers its
-    * PK — re-inserting (or upserting) the key afterwards resurrects it.
-    * Storage stays append-only; [[tableAsOf]] snapshots from before the
-    * delete still see the rows (reproducibility of past training runs),
-    * and [[compactCurrent]] is the physical erasure that actually
-    * forgets them. `keys` must be a single-column frame of PK values. */
-  def deleteRows(name: String, keys: DataFrame, batchId: String): Unit = {
-    require(pkColumns.contains(name), s"table $name has no PK to delete by")
-    require(keys.columns.length == 1, "keys must be a single PK column")
-    // fail FAST on a key-type mismatch: tombstones() reads committed
-    // tombstone files with the table schema's PK type, so a frame of
-    // the wrong type would write + commit fine and then poison every
-    // later currentView/compaction read with a parquet convert error —
-    // a committed batch can't be un-committed (review r8)
-    val pkType = tableSchemas(name).fields
-      .find(_.name == pkColumns(name)).get.dataType
-    require(keys.schema.fields.head.dataType == pkType,
-      s"delete keys for $name must be ${pkType.simpleString}, " +
-        s"got ${keys.schema.fields.head.dataType.simpleString}")
-    validateBatchId(batchId)
-    val markers = committedMarkers()
-    require(!markers.exists(_._2 == batchId), s"batch $batchId already committed")
-    val dest = tombstonesDir.resolve(name).resolve(s"batch=$batchId")
-    val staging = stagingDir(batchId)
-    try keys.toDF(pkColumns(name)).coalesce(1)
-      .write.mode("overwrite").parquet(staging.resolve("tombstones").toString)
-    catch { case e: Throwable => deleteRecursively(staging); throw e }
-    graft.core.CommitProtocol.publish(staging,
-      Seq(staging.resolve("tombstones") -> dest)) {
-      Files.createDirectories(commitsDir)
-      Files.createFile(commitsDir.resolve(f"${nextSeq(markers)}%08d.$batchId"))
-      ()
-    }
-  }
-
-  private def tombstonesDir: Path = rootPath.resolve("_tombstones")
-
-  /** (pk, _tseq) of every committed tombstone for a table. One
-    * multi-path scan with the batch seq recovered from the file path —
-    * the same shape as [[taggedTable]], for the same reason: a
-    * union-per-batch plan grows O(tombstone batches) at planning time,
-    * and a long-lived warehouse accumulates deletion batches just like
-    * data batches (review r7; previously a unionByName reduce). */
-  private def tombstones(name: String): Option[DataFrame] = {
-    val pk = pkColumns(name)
-    val pkField = tableSchemas(name).fields.find(_.name == pk).get
-    val dirs = committedBatchIds().zipWithIndex.flatMap { case (b, i) =>
-      val dir = tombstonesDir.resolve(name).resolve(s"batch=$b")
-      if (Files.isDirectory(dir)) Some((i.toLong, dir)) else None
-    }
-    if (dirs.isEmpty) None
-    else {
-      import spark.implicits._
-      val encSeq = dirs.map { case (i, dir) =>
-        val u = dir.toUri.toString.stripSuffix("/")
-        (u.substring(u.lastIndexOf("batch=") + 6), i)
-      }
-      val seqDf = broadcast(encSeq.toDF("_bid", "_tseq"))
-      // Anchored to the file's PARENT directory: an unanchored
-      // "batch=..." matched the FIRST occurrence in the URI, while the
-      // broadcast side takes the LAST — a warehouse root path that
-      // itself contains "batch=" made them disagree and the inner join
-      // silently dropped every tombstone (deleted rows resurrect with
-      // no error; review r8, advisor finding). Same fix in taggedTable.
-      val scan = spark.read.schema(StructType(Seq(pkField)))
-        .parquet(dirs.map(_._2.toString): _*)
-        .withColumn("_bid",
-          regexp_extract(input_file_name(), "/batch=([^/]+)/[^/]*$", 1))
-      Some(scan.join(seqDf, Seq("_bid")).select(col(pk), col("_tseq")))
-    }
-  }
-
-  /** Committed batches that were landed via [[upsertBatch]]. */
-  private def upsertBatchIds(): Set[String] =
-    listDir(upsertsDir).map(_.getFileName.toString).toSet
-      .intersect(committedBatchIds().toSet)
-
-  /** One scan of a table's committed batch dirs with every row tagged by
-    * its batch id and commit sequence — the shared substrate of
-    * [[currentView]] and the append-only PK audit. A single multi-path
-    * FileScan (not a union-per-batch, whose planning cost would grow
-    * O(batches) per read): the batch id is recovered from the file path
-    * and mapped to its commit seq through a broadcast of the tiny
-    * (id, seq) list. The join keys are derived from each dir's own URI,
-    * so they are consistent-by-construction with input_file_name()'s
-    * URI form (our dirs are created by Files.move — no partition-value
-    * escaping is ever applied). None when nothing is committed. */
-  private def taggedTable(name: String): Option[DataFrame] = {
-    val schema = tableSchemas(name)
-    val dirs = committedBatchIds().zipWithIndex.flatMap { case (b, i) =>
-      val dir = rootPath.resolve(name).resolve(s"batch=$b")
-      if (Files.isDirectory(dir)) Some((b, i.toLong, dir)) else None
-    }
-    if (dirs.isEmpty) None
-    else {
-      import spark.implicits._
-      val encSeq = dirs.map { case (b, i, dir) =>
-        val u = dir.toUri.toString.stripSuffix("/")
-        (u.substring(u.lastIndexOf("batch=") + 6), b, i)
-      }
-      val seqDf = broadcast(encSeq.toDF("_bid", "_batch", "_seq"))
-      // parent-dir-anchored for the same reason as tombstones(): the
-      // first-vs-last "batch=" asymmetry under a root path containing
-      // "batch=" (here a dropped row is visible missing data, but the
-      // extraction must still be correct)
-      val scan = spark.read.schema(schema).parquet(dirs.map(_._3.toString): _*)
-        .withColumn("_bid",
-          regexp_extract(input_file_name(), "/batch=([^/]+)/[^/]*$", 1))
-      Some(scan.join(seqDf, Seq("_bid")).drop("_bid"))
-    }
-  }
-
-  /** Current (SCD1) view of a PK'd table: the latest committed row per
-    * key, resolved at read time. Rows carry their batch's commit
-    * sequence and the per-key winner is selected through the bounded
-    * top-k operator (k = 1 — no window, no sort over the batch union).
-    * The data read grows with the batch count like any merge-on-read
-    * table; [[compactCurrent]] is the rewrite that collapses history
-    * when that matters. */
-  def currentView(name: String): DataFrame = {
-    require(pkColumns.contains(name), s"table $name has no PK for a current view")
-    val pk = pkColumns(name)
-    taggedTable(name) match {
-      case None => tableFor(name, Seq.empty)
-      case Some(t) =>
-        val winners = graft.plans.TopKPerGroup.topKPerGroup(
-          t, Seq(col(pk)), Seq(col("_seq").desc), k = 1)
-        val alive = tombstones(name) match {
-          case None => winners
-          case Some(ts) =>
-            // a row is dead iff some tombstone was committed AFTER it;
-            // a later re-insert/upsert outlives the tombstone. The
-            // tombstone set is deletions-only (≪ table) — broadcast.
-            val latest = ts.groupBy(col(pk)).agg(max(col("_tseq")).as("_tseq"))
-            winners.join(broadcast(latest), Seq(pk), "left_outer")
-              .filter(col("_tseq").isNull || col("_seq") > col("_tseq"))
-              .drop("_tseq")
-        }
-        alive.drop("_batch", "_seq")
-    }
-  }
-
-  private def appendTables(tables: Seq[(String, DataFrame)], batchId: String,
-      crossBatchPkCheck: Boolean = true): Unit = {
+  private def appendTables(tables: Seq[(String, DataFrame)], batchId: String): Unit = {
     validateBatchId(batchId)
     // one listing serves the already-committed check, the key-set
     // catch-up and the marker's sequence (single writer)
@@ -347,7 +128,7 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
     val staging = stagingDir(batchId)
     val validated = try {
       val observed = tables.flatMap { case (name, df) =>
-        val obs = pkColumns.get(name).filter(_ => validatePks).map(_ -> Observation())
+        val obs = pkColumns.get(name).map(_ -> Observation())
         obs.fold(df) { case (pk, o) =>
           df.observe(o, collect_list(col(pk)).as("keys"),
             count(when(col(pk).isNull, 1)).as("nulls"))
@@ -358,7 +139,7 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
       else {
         val committed = keysFor(markers)
         Some(committed -> observed.map { case (name, pk, o) =>
-          name -> checkedKeys(name, pk, o, committed(name), batchId, crossBatchPkCheck)
+          name -> checkedKeys(name, pk, o, committed(name), batchId)
         })
       }
     } catch {
@@ -388,10 +169,10 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
 
   /** Every committed PK per table, for the commit listing `markers`. The
     * held set is reused while every marker it covers is still listed; a
-    * covered marker that is gone (`clear`, `compact`, `compactCurrent`,
-    * an external change) discards it. Markers not yet covered — first
-    * use on an existing root, batches another writer committed — are
-    * read with one PK-column scan of only their batch dirs. */
+    * covered marker that is gone (`clear`, `compact`, an external
+    * change) discards it. Markers not yet covered — first use on an
+    * existing root, batches another writer committed — are read with
+    * one PK-column scan of only their batch dirs. */
   private def keysFor(markers: Seq[(String, String)]): CommittedKeys = {
     val held = Some(knownKeys).filter(_.covered.subsetOf(markers.toSet))
       .getOrElse(CommittedKeys.empty)
@@ -410,10 +191,10 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
   }
 
   /** A staged write's observed keys, checked the way the reference's
-    * `PRIMARY KEY` columns are: not NULL, unique within the batch and,
-    * unless `crossBatch` is waived, not already committed. */
+    * `PRIMARY KEY` columns are: not NULL, unique within the batch and
+    * not already committed. */
   private def checkedKeys(name: String, pk: String, obs: Observation,
-      committed: Set[String], batchId: String, crossBatch: Boolean): Seq[String] = {
+      committed: Set[String], batchId: String): Seq[String] = {
     // bounded: an observation whose listener event is lost must fail the
     // page, not hang the writer
     val m = Await.result(obs.future, ObservationWait)
@@ -422,51 +203,24 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
         s"""null value in column "$pk" of relation "$name" violates not-null constraint (batch $batchId)""")
     val keys = m.getAs[scala.collection.Seq[String]]("keys").toSeq
     val seen = scala.collection.mutable.HashSet.empty[String]
-    keys.find(k => !seen.add(k))
-      .orElse(if (crossBatch) keys.find(committed) else None)
+    keys.find(k => !seen.add(k)).orElse(keys.find(committed))
       .foreach(v => throw new IllegalStateException(
         s"duplicate key value violates unique constraint: $name.$pk = $v (batch $batchId)"))
     keys
   }
 
-  /** One-shot global PK validation over everything committed — the
-    * companion to validatePks=false bulk loads: one shuffle keyed by PK
-    * per table, instead of a per-page check against a driver-held set of
-    * every committed key. Rows landed via
-    * [[upsertBatch]] are excluded from the cross-batch uniqueness check:
-    * a correction legitimately shares its PK with the row it supersedes
-    * (its within-batch uniqueness was already enforced at commit), so
-    * only duplicates among APPEND batches are violations. */
-  def validateAllPks(): Unit =
-    pkColumns.foreach { case (name, pk) =>
-      taggedTable(name).foreach { t =>
-        val ups = upsertBatchIds()
-        val appends =
-          if (ups.isEmpty) t
-          else t.filter(!col("_batch").isInCollection(ups.toSeq))
-        val dup = appends.select(pk)
-          .groupBy(col(pk)).count().filter(col("count") > 1).limit(1).collect()
-        if (dup.nonEmpty)
-          throw new IllegalStateException(
-            s"duplicate key value violates unique constraint: $name.$pk = ${dup.head.get(0)}")
-      }
-    }
-
-  private[graft] def committedBatches: Seq[String] = committedBatchIds()
-
   /** Compact the committed history into ONE batch per table — the
-    * small-files maintenance a 100 TB ingest needs: per-page commits
+    * small-files maintenance a long ingest needs: per-page commits
     * accumulate a directory (and shuffle-partition-many files) per
     * batch, and scan planning degrades with file count long before data
-    * size matters. Semantics:
+    * size matters. A bag fold: every table's rows, unioned over its
+    * committed batches. Semantics:
     *
-    *  - Equivalent current reads: `table(name)` returns the same rows
-    *    before and after (asserted in the spec); files collapse to
-    *    `numFiles` per table.
+    *  - Equivalent reads: `table(name)` returns the same rows before and
+    *    after (asserted in the spec); files collapse to `numFiles` per
+    *    table.
     *  - History REWRITE: like VACUUM/OPTIMIZE in table formats, prior
-    *    batch ids disappear — as-of snapshots older than the compaction
-    *    are no longer addressable. Callers needing history keep the
-    *    pre-compaction root.
+    *    batch ids disappear.
     *  - Crash-safe ordering (review r6): stage → publish new dirs →
     *    marker swap → GC old dirs. A crash before the marker swap
     *    leaves reads untouched (new dirs are unmarked orphans, cleaned
@@ -484,40 +238,6 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
     * periodic re-compaction works).
     */
   def compact(numFiles: Int = 1): String = {
-    // bag compaction collapses every batch into one dir, erasing the
-    // commit-order that currentView's winner/tombstone resolution relies
-    // on — with committed upserts or deletes it would silently resurrect
-    // superseded or deleted rows
-    require(upsertBatchIds().isEmpty && tombstoneBatchIds().isEmpty,
-      "committed upserts/deletes present — bag compaction would lose the " +
-        "mutation order; use compactCurrent()")
-    compactAs(table, numFiles)
-  }
-
-  private def tombstoneBatchIds(): Set[String] = {
-    val committed = committedBatchIds().toSet
-    pkColumns.keys.flatMap(n => listDir(tombstonesDir.resolve(n))
-      .map(_.getFileName.toString.stripPrefix("batch=")))
-      .toSet.intersect(committed)
-  }
-
-  /** Compaction for a warehouse that has taken upserts or deletes: PK'd
-    * tables are rewritten to their [[currentView]] (superseded row
-    * versions and tombstoned rows are physically erased — the
-    * merge-on-read VACUUM, and the point where a deletion obligation is
-    * actually fulfilled on disk), unkeyed tables to their bag contents.
-    * Afterwards the single compacted batch is append-semantics again
-    * (upsert flags and tombstones are cleared), and like [[compact]]
-    * the pre-compaction as-of history is retired. */
-  def compactCurrent(numFiles: Int = 1): String = {
-    val id = compactAs(
-      n => if (pkColumns.contains(n)) currentView(n) else table(n), numFiles)
-    deleteRecursively(upsertsDir)
-    deleteRecursively(tombstonesDir)
-    id
-  }
-
-  private def compactAs(view: String => DataFrame, numFiles: Int): String = {
     // unique id per run so compaction is re-runnable (a fixed id would
     // collide with its own previous output — review r6 #2). Derived from
     // nextSeq but probed against the COMMITTED ids: the marker swap
@@ -526,12 +246,11 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
     // compaction of a one-batch warehouse threw "already committed"
     // (review r7; pinned in the re-compaction spec).
     val base = nextSeq()
-    val committed = committedBatchIds().toSet
+    val committed = committedBatches.toSet
     val batchId = Iterator.from(0).map(k => s"compacted-${base + k}")
       .find(id => !committed.contains(id)).get
-    validateBatchId(batchId)
     val liveTables = tableSchemas.keys.toSeq.sorted
-      .map(n => n -> view(n))
+      .map(n => n -> table(n))
       .filter(_._2.take(1).nonEmpty)
     if (liveTables.isEmpty) return batchId
     val staging = stagingDir(batchId)
@@ -547,7 +266,7 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
       // were, and the new dirs are invisible orphans the protocol (or
       // the next compaction) clears. Old data is never deleted before
       // the replacement is durable (review r6 #1/#3).
-      require(!committedBatchIds().contains(batchId),
+      require(!committedBatches.contains(batchId),
         s"batch $batchId already committed")
       val oldMarkers = listDir(commitsDir)
       graft.core.CommitProtocol.publish(staging,
@@ -559,7 +278,6 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
         // ops (reads see EMPTY tables, all data still on disk) — the
         // documented single-writer caveat, a two-file window.
         oldMarkers.foreach(Files.deleteIfExists(_))
-        markerParse.clear() // parse memo may hold retired names
         Files.createDirectories(commitsDir)
         Files.createFile(commitsDir.resolve(f"${nextSeq()}%08d.$batchId"))
         ()
@@ -575,31 +293,6 @@ final class ShiftWarehouse(spark: SparkSession, root: String, validatePks: Boole
       }
       batchId
     } finally deleteRecursively(staging)
-  }
-
-  /** Operational counters in the committed-store sweep shape
-    * (IndexOps.ManagedStore — judge r16 #4/#5: the warehouse was the
-    * one standing store with no health row or sweep entry), summed over
-    * the PK-carrying tables: (committed batches beyond the first, rows
-    * in the FIRST committed batch, rows appended after it, live rows
-    * per currentView). The batch chain maps onto the delta chain —
-    * compaction folds it to one batch — and retired = base + added −
-    * live counts both superseded upsert versions and tombstoned rows,
-    * exactly the space [[compactCurrent]] reclaims. Cost shape matches
-    * the index stores' healthCounts: one bounded pass per table. */
-  def healthCounts(): (Long, Long, Long, Long) = {
-    val ids = committedMarkers().map { case (seq, id) => (seq, id) }
-      .sortBy(_._1).map(_._2)
-    val names = ShiftWarehouse.pkColumns.keys.toSeq.sorted
-    if (ids.isEmpty) (0L, 0L, 0L, 0L)
-    else {
-      val nBase = names.map(n => tableFor(n, Seq(ids.head)).count()).sum
-      val nAdded =
-        if (ids.size == 1) 0L
-        else names.map(n => tableFor(n, ids.tail).count()).sum
-      val nLive = names.map(n => currentView(n).count()).sum
-      ((ids.size - 1).toLong, nBase, nAdded, nLive)
-    }
   }
 
   /** `clear_data` (shift_data_processor.py:300-326): DELETE ... CASCADE ≡

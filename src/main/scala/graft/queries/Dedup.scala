@@ -858,20 +858,14 @@ object Dedup {
     * the corpus, not a recomputation per query. The in-process analog is
     * this cache over the localCheckpoint'd result. Like any maintained
     * index it can go stale if the corpus under sfDir is REWRITTEN
-    * in-place within one session — call [[invalidateClusterCache]] after
-    * such a rewrite (tests use fresh directories instead). Lifecycle is
-    * owned by [[graft.operators.Staging]] (memoized entry per
-    * session+corpus; invalidation drops the reference and the
+    * in-place within one session (tests use fresh directories instead).
+    * Lifecycle is owned by [[graft.operators.Staging]] (memoized entry
+    * per session+corpus; invalidation drops the reference and the
     * ContextCleaner reclaims the checkpoint blocks). */
   def duplicateClusters(spark: SparkSession, sfDir: String): DataFrame =
     graft.operators.Staging.memoized(spark, sfDir, "dup-clusters") {
       computeClusters(spark, sfDir)
     }
-
-  /** Drop staged dedup state — cluster labels AND the shingle stages —
-    * for one corpus or all. */
-  def invalidateClusterCache(sfDir: Option[String] = None): Unit =
-    graft.operators.Staging.invalidate(sfDir)
 
   private def computeClusters(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._

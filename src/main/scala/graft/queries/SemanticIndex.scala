@@ -45,13 +45,6 @@ import graft.core.StoreLayout.readDir
   * suppressor is later tombstoned — re-admission is a POLICY decision
   * the resurface audit (q_semantic_dedup_deletes) surfaces for the next
   * ingest pass, not something the index invents silently.
-  *
-  * [[retrainCompact]] closes the loop q_ivf_drift only recommended
-  * (judge r15 #2): when the drift monitor flags the committed model
-  * stale, compaction re-fits Lloyd's over the composed LIVE vectors,
-  * reassigns every live vector under the new model, and publishes new
-  * cells + new model as one base version — the model and the
-  * assignment can never be committed out of step.
   */
 object SemanticIndex {
 
@@ -132,10 +125,11 @@ object SemanticIndex {
 
   /** Per-cell Lloyd residual with ENGINE-EXACT arithmetic (the
     * q_ivf_drift decimal discipline: 9-dp decimal component sums,
-    * double cosine, 9-dp decimal cut) — the [[drift]] readout hardened
-    * so the health face can state it against a DuckDB oracle. Returns
+    * double cosine, 9-dp decimal cut), so the health face can state it
+    * against a DuckDB oracle: cosine(committed centroid, live member
+    * mean), HIGHER is closer to Lloyd stationarity. Returns
     * (cell, residual DECIMAL(12,9)); callers cast to double at the
-    * output boundary. Higher is closer to stationarity. */
+    * output boundary. */
   private[queries] def residualsD9(spark: SparkSession, root: Path,
       vectors: DataFrame): DataFrame = {
     import spark.implicits._
@@ -159,69 +153,11 @@ object SemanticIndex {
 
   /** Fold the delta chain into a new base — the physical erasure of
     * tombstoned rows. The committed model (if any) carries over
-    * unchanged: plain compaction reclaims space, it never moves an
-    * assignment ([[retrainCompact]] is the one that does). */
+    * unchanged: compaction reclaims space, it never moves an
+    * assignment. */
   def compact(spark: SparkSession, root: Path): Unit = {
     val snap = cells(spark, root).localCheckpoint(eager = true)
     writeBase(spark, root, snap, model = model(spark, root)
       .map(_.localCheckpoint(eager = true)), carryEpochs = true)
-  }
-
-  /** Retraining compaction — the execution of the decision q_ivf_drift
-    * only reported (judge r15 #2): re-fit Lloyd's over the composed
-    * LIVE vectors, reassign every live vector under the new model, and
-    * publish cells + model as ONE base version through the protocol.
-    * Between retrains, assignments and the model stand (the tombstone-
-    * discipline contract); after a retrain, the composed view equals
-    * the fresh assignment of the live population under the NEW model —
-    * asserted in SemanticIndexSpec on a drifted fixture, along with
-    * residual(after) > residual(before): [[drift]]'s residual is a
-    * cosine, so HIGHER means closer to Lloyd stationarity (advisor r16
-    * caught the doc stating the inequality backwards; the spec always
-    * asserted the correct direction).
-    *
-    * @param vectors (vec_id, v: array&lt;double&gt;) covering every live id —
-    *                the corpus embedding table at production
-    * Plan shape at 100 TB: KMeans.fit is k·dim model iterations over
-    * the live corpus (the index-build job, amortized per retrain
-    * cadence); reassignment is one corpus × broadcast(k centroids)
-    * argmax pass — the same cost as the original index build, which is
-    * exactly what "retrain" means; no step is quadratic. */
-  def retrainCompact(spark: SparkSession, root: Path, vectors: DataFrame,
-      k: Int, iters: Int): Unit = {
-    import spark.implicits._
-    val live = cells(spark, root).select($"vec_id")
-      .join(vectors.select($"vec_id", $"v".cast("array<double>").as("v")),
-        Seq("vec_id"))
-    val corpus = graft.operators.KMeans.prep(live, "v", "vec_id")
-      .localCheckpoint(eager = true)
-    val newModel = graft.operators.KMeans.fit(corpus, k, iters)
-      .localCheckpoint(eager = true)
-    val reassigned = graft.operators.KMeans.assign(corpus, newModel)
-      .select($"vid".as("vec_id"), $"cluster_id".as("cell"))
-    writeBase(spark, root, reassigned, model = Some(newModel),
-      carryEpochs = true)
-  }
-
-  /** Per-cell Lloyd residual of the committed model against the
-    * composed live members — cosine(committed centroid, live member
-    * mean), so HIGHER is closer to stationarity (1.0 = the centroid the
-    * next Lloyd step would pick); the q_ivf_drift readout over THIS
-    * index's own state, used by the retrain spec to show
-    * residual(after retrain) > residual(before). One posexplode hash
-    * agg + a k-row broadcast join — the monitor's exact plan shape. */
-  def drift(spark: SparkSession, root: Path, vectors: DataFrame): DataFrame = {
-    import spark.implicits._
-    val m = model(spark, root).getOrElse(sys.error(s"no committed model at $root"))
-    val members = cells(spark, root)
-      .join(vectors.select($"vec_id", $"v".cast("array<double>").as("v")),
-        Seq("vec_id"))
-    val mv = members.select($"cell", posexplode($"v"))
-      .groupBy($"cell", $"pos").agg(sum($"col").as("s"))
-      .groupBy($"cell")
-      .agg(transform(array_sort(collect_list(struct($"pos", $"s"))),
-        r => r.getField("s")).as("mv"))
-    mv.join(broadcast(m), $"cell" === $"cluster_id")
-      .select($"cell", graft.functions.functions.cosine_sim($"mv", $"cv").as("residual"))
   }
 }

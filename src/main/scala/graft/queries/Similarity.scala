@@ -44,7 +44,7 @@ import graft.core.Tables
 object Similarity {
 
   private[queries] val Dim = 64
-  private val NumQueries = 10 // probe set: vec_id < 10
+  private[queries] val NumQueries = 10 // probe set: vec_id < 10
   private val TopK = 5
   private val Bands = 8 // LSH bands ...
   private val BandBits = 2 // ... of 2 sign-planes each
@@ -1265,37 +1265,13 @@ object Similarity {
   // decimals — no float vector is read until the k·PqExpand re-rank
   // fetch. Composes with IVF exactly like the int8 scorer (ADC inside
   // probed cells); the exhaustive form here is the q_ann_brute analog.
-  private val PqM = 16 // subspaces
-  private val PqSub = Dim / PqM // dims per subspace
-  private val PqStride = 3 // codebook = every 3rd vector ...
+  private[queries] val PqM = 16 // subspaces
+  private[queries] val PqSub = Dim / PqM // dims per subspace
+  private[queries] val PqStride = 3 // codebook = every 3rd vector ...
   private val PqK = 32 // ... capped at 32 entries
   private val PqExpand = 16 // ADC nominates top k·16 for the re-rank
 
-  /** Fixed-association 4-term subspace expression over full vectors
-    * with 1-based index arithmetic (identical string shape on the
-    * DuckDB side): ((t0 op t1) + t2) + t3. */
-  private def pqTerms(term: Int => String): String =
-    (0 until PqSub).map(term).reduce((a, b) => s"($a + $b)")
-
-  /** Per-subspace squared L2 distance (encode side), 9-dp decimal. */
-  private def pqDist2Expr(x: String, c: String): String = {
-    val t = pqTerms { j =>
-      val xi = s"element_at($x, $PqSub*m + ${j + 1})"
-      val ci = s"element_at($c, $PqSub*m + ${j + 1})"
-      s"($xi - $ci) * ($xi - $ci)"
-    }
-    s"cast(round($t, 9) as decimal(18,9))"
-  }
-
-  /** Per-subspace partial inner product (LUT side), 9-dp decimal. */
-  private def pqDotExpr(x: String, c: String): String = {
-    val t = pqTerms { j =>
-      s"element_at($x, $PqSub*m + ${j + 1}) * element_at($c, $PqSub*m + ${j + 1})"
-    }
-    s"cast(round($t, 9) as decimal(12,9))"
-  }
-
-  private def pqCodebook(emb: DataFrame): DataFrame = {
+  private[queries] def pqCodebook(emb: DataFrame): DataFrame = {
     import emb.sparkSession.implicits._
     emb.filter($"vec_id" % PqStride === 0 &&
         $"vec_id" < PqStride.toLong * PqK)
@@ -1341,28 +1317,6 @@ object Similarity {
           $"v", pqCodebookFlat(spark, sfDir), PqM).as("codes"))
     }
 
-  /** The relational encode the pq_encode kernel replaced — kept ONLY
-    * as the parity reference: PqParitySpec asserts the kernel-built
-    * staged table equals this row-for-row on the real corpus, which is
-    * what certifies the kernel's replicated round-9 decimal chain (and
-    * keeps the unchanged DuckDB oracle honest). Never called from a
-    * query face. */
-  private[queries] def pqCodesReference(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val emb = corpusVectors(spark, sfDir)
-    val pairs = emb.crossJoin(broadcast(pqCodebook(emb)))
-      .select($"vec_id", $"v", $"cid", $"cv",
-        explode(sequence(lit(0), lit(PqM - 1))).as("m"))
-      .select($"vec_id", $"m", $"cid",
-        expr(pqDist2Expr("v", "cv")).as("d2"))
-    graft.plans.TopKPerGroup.topKPerGroup(pairs,
-        Seq($"vec_id", $"m"), Seq($"d2".asc, $"cid".asc), 1)
-      .select($"vec_id", $"m", ($"cid" / PqStride).cast("int").as("ci"))
-      .groupBy($"vec_id")
-      .agg(transform(array_sort(collect_list(struct($"m", $"ci"))),
-        x => x.getField("ci")).as("codes"))
-  }
-
   /** Per-query packed LUT: lut(m*PqK + ci) = ⟨query sub m, centroid ci
     * sub m⟩ as a scale-9 fixed-point long, one fused pq_lut kernel
     * pass per query row against the plan-time codebook — the kernel
@@ -1376,26 +1330,6 @@ object Similarity {
       .select($"vec_id".as("query_id"),
         graft.functions.functions.pq_lut(
           $"v", pqCodebookFlat(spark, sfDir), PqM).as("lut"))
-  }
-
-  /** The relational LUT the pq_lut kernel replaced — parity reference
-    * only (PqParitySpec), like [[pqCodesReference]]. */
-  private[queries] def pqLutReference(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = corpusVectors(spark, sfDir)
-    import emb.sparkSession.implicits._
-    emb.filter($"vec_id" < NumQueries)
-      .crossJoin(broadcast(pqCodebook(emb)))
-      .select($"vec_id".as("query_id"), $"cid", $"v", $"cv",
-        explode(sequence(lit(0), lit(PqM - 1))).as("m"))
-      .select($"query_id", $"m", ($"cid" / PqStride).cast("int").as("ci"),
-        expr(pqDotExpr("v", "cv")).as("pdot"))
-      // decimal(12,9) × 10^9 is exactly integral: the long IS the 9-dp
-      // value, no float ever touches the packed table
-      .select($"query_id", $"m", $"ci",
-        ($"pdot" * lit(1000000000L)).cast("long").as("p"))
-      .groupBy($"query_id")
-      .agg(transform(array_sort(collect_list(struct($"m", $"ci", $"p"))),
-        x => x.getField("p")).as("lut"))
   }
 
   /** ADC score + shortlist + float re-rank of a (query_id, nid)

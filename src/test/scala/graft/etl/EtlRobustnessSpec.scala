@@ -77,17 +77,6 @@ class EtlRobustnessSpec extends SparkTestBase {
     assert(wh.committedBatches == before, "reused runId must not commit any batch")
   }
 
-  test("validateAllPks passes on a clean warehouse and catches cross-batch dups") {
-    val wh = new ShiftWarehouse(spark, tempDir("wh-vall"), validatePks = false)
-    val page = PageSource.parsePage(spark, ShiftFixtures.singlePage)
-    wh.appendBatch(ShiftNormalizer.normalize(page), "b1")
-    wh.validateAllPks()
-    // same page again under validatePks=false commits silently...
-    wh.appendBatch(ShiftNormalizer.normalize(page), "b2")
-    // ...and the one-shot global check catches the duplicate PKs
-    intercept[IllegalStateException](wh.validateAllPks())
-  }
-
   test("is_paid stays NULL when the source JSON has an explicit null") {
     val json =
       """{"results": [{"id": "s1", "date": "2023-11-01", "start": 1698817200000,

@@ -7,13 +7,23 @@ import graft.SparkTestBase
 class ShiftWarehouseSpec extends SparkTestBase {
 
   test("committed batch is visible with correct counts") {
-    val wh = new ShiftWarehouse(spark, tempDir("wh-commit"))
+    val root = tempDir("wh-commit")
+    val wh = new ShiftWarehouse(spark, root)
     val page = PageSource.parsePage(spark, ShiftFixtures.singlePage)
     wh.appendBatch(ShiftNormalizer.normalize(page), "b0")
     assert(wh.shifts.count() === 2)
     assert(wh.breaks.count() === 2)
     assert(wh.allowances.count() === 3)
     assert(wh.awardInterpretations.count() === 2)
+    // the <seq>.<id> marker grammar: an id that reads as a marker is
+    // refused, and a marker outside the grammar fails reads by name
+    val e = intercept[IllegalArgumentException] {
+      wh.appendBatch(ShiftNormalizer.normalize(page), "20240102.late")
+    }
+    assert(e.getMessage.contains("marker grammar"))
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(root, "_commits", "nightly"))
+    val bad = intercept[IllegalStateException](wh.shifts)
+    assert(bad.getMessage.contains("'nightly'"))
   }
 
   test("duplicate PK within a batch rolls back the whole batch (tests:242-300)") {
@@ -116,179 +126,6 @@ class ShiftWarehouseSpec extends SparkTestBase {
     commit(ShiftGenerator.pageJson(bare, 0, 3), "p2")
     assert(wh.shifts.count() == 17 && wh.breaks.count() == breaks)
     intercept[IllegalStateException](commit(ShiftGenerator.pageJson(bare, 0, 3), "p3"))
-    // upserts of zero rows and of one row commit; both are observed
-    wh.upsertBatch("shifts", wh.shifts.filter(org.apache.spark.sql.functions.lit(false)), "u0")
-    wh.upsertBatch("shifts", wh.shifts.limit(1), "u1")
-    assert(wh.committedBatches.takeRight(2) == Seq("u0", "u1"))
-    assert(wh.currentView("shifts").count() == 17)
-  }
-
-  test("as-of snapshot reads are stable as later batches land") {
-    // validatePks=false so the same fixture page can land twice
-    val wh = new ShiftWarehouse(spark, tempDir("wh-snap"), validatePks = false)
-    val page = PageSource.parsePage(spark, ShiftFixtures.singlePage)
-    wh.appendBatch(ShiftNormalizer.normalize(page), "b0")
-    val snapAtB0 = wh.tableAsOf("shifts", "b0")
-    assert(snapAtB0.count() === 2)
-    wh.appendBatch(ShiftNormalizer.normalize(page), "b1")
-    // current read sees both batches; the b0 snapshot is unchanged
-    assert(wh.shifts.count() === 4)
-    assert(wh.tableAsOf("shifts", "b0").count() === 2)
-    assert(wh.tableAsOf("shifts", "b1").count() === 4)
-  }
-
-  test("as-of snapshots follow commit order even when ids sort differently") {
-    // 'run-kpis' < 'run-p00001' lexicographically, but it is committed
-    // SECOND — the snapshot at it must contain both batches
-    val wh = new ShiftWarehouse(spark, tempDir("wh-snap-order"), validatePks = false)
-    val page = PageSource.parsePage(spark, ShiftFixtures.singlePage)
-    wh.appendBatch(ShiftNormalizer.normalize(page), "run-p00001")
-    wh.appendBatch(ShiftNormalizer.normalize(page), "run-kpis")
-    assert(wh.tableAsOf("shifts", "run-p00001").count() === 2)
-    assert(wh.tableAsOf("shifts", "run-kpis").count() === 4)
-    val e = intercept[IllegalArgumentException] {
-      wh.tableAsOf("shifts", "never-committed")
-    }
-    assert(e.getMessage.contains("never committed"))
-  }
-
-  test("legacy marker that mimics the <seq>.<id> grammar stays visible (ADVICE r5)") {
-    // A pre-sequence layout wrote bare batch-id markers. An id like
-    // '20240101.nightly' parses as seq=20240101/id=nightly under the new
-    // grammar — without the batch-dir disambiguation, reads would look
-    // for batch=nightly, miss, and silently drop the batch's data.
-    val root = tempDir("wh-legacy")
-    val wh = new ShiftWarehouse(spark, root)
-    val page = PageSource.parsePage(spark, ShiftFixtures.singlePage)
-    val legacyId = "20240101.nightly"
-    // simulate the legacy layout: data dirs + bare-id marker, no sequence
-    val wh2 = new ShiftWarehouse(spark, root, validatePks = false)
-    wh2.appendBatch(ShiftNormalizer.normalize(page), "tmp-stage")
-    val base = java.nio.file.Paths.get(root)
-    Seq("shifts", "breaks", "allowances", "award_interpretations").foreach { t =>
-      java.nio.file.Files.move(
-        base.resolve(t).resolve("batch=tmp-stage"),
-        base.resolve(t).resolve(s"batch=$legacyId"))
-    }
-    java.nio.file.Files.delete(base.resolve("_commits").resolve("00000001.tmp-stage"))
-    java.nio.file.Files.createFile(base.resolve("_commits").resolve(legacyId))
-    assert(wh.shifts.count() === 2, "legacy batch must stay visible")
-    assert(wh.committedBatches === Seq(legacyId))
-    // and NEW ids that would collide with the marker grammar are rejected
-    val e = intercept[IllegalArgumentException] {
-      wh.appendBatch(ShiftNormalizer.normalize(page), "20240102.late")
-    }
-    assert(e.getMessage.contains("marker grammar"))
-    // collision case (review r6): a SEQUENCED batch whose id equals the
-    // legacy marker's truncated suffix must not be double-read, and the
-    // legacy batch must not vanish — full-name dir wins the parse
-    val whNoPk = new ShiftWarehouse(spark, root, validatePks = false)
-    whNoPk.appendBatch(ShiftNormalizer.normalize(page), "nightly")
-    assert(whNoPk.committedBatches.sorted === Seq(legacyId, "nightly").sorted)
-    assert(whNoPk.shifts.count() === 4, "each batch read exactly once")
-  }
-
-  test("upsert replaces rows per PK in the current view, history stays as-of readable") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.lit
-    val wh = new ShiftWarehouse(spark, tempDir("wh-upsert"))
-    val page = PageSource.parsePage(spark, ShiftFixtures.singlePage)
-    wh.appendBatch(ShiftNormalizer.normalize(page), "b0")
-    val original = wh.shifts.select($"shift_id", $"shift_cost".cast("double"))
-      .as[(String, Double)].collect().toMap
-    assert(original.size == 2)
-    val (replacedId, keptId) = (original.keys.min, original.keys.max)
-    // SCD1 correction: same PK, new cost
-    val corrected = wh.shifts.filter($"shift_id" === replacedId)
-      .withColumn("shift_cost", lit(999.5).cast("decimal(13,4)"))
-    wh.upsertBatch("shifts", corrected, "b1-fix")
-    // a plain append with the same PK would have rolled back — upsert commits
-    val cur = wh.currentView("shifts")
-      .select($"shift_id", $"shift_cost".cast("double"))
-      .as[(String, Double)].collect().toMap
-    assert(cur.size == 2, "one row per PK in the current view")
-    assert(cur(replacedId) == 999.5, "later batch wins per PK")
-    assert(cur(keptId) == original(keptId), "untouched PK keeps its row")
-    // bag-semantics table read sees both versions; as-of sees the old one
-    assert(wh.shifts.count() == 3)
-    assert(wh.tableAsOf("shifts", "b0").count() == 2)
-    // within-batch duplicate PKs still roll an upsert back
-    intercept[IllegalStateException] {
-      wh.upsertBatch("shifts", corrected.union(corrected), "b2-dup")
-    }
-    assert(wh.currentView("shifts").count() == 2)
-    // the global PK audit must not flag the legitimate correction...
-    wh.validateAllPks()
-    // ...and a table without a PK is a clear error, not a key lookup
-    intercept[IllegalArgumentException](wh.currentView("kpis"))
-  }
-
-  test("compaction after upserts keeps the corrected row, not the superseded one") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.lit
-    val wh = new ShiftWarehouse(spark, tempDir("wh-upsert-compact"))
-    val page = PageSource.parsePage(spark, ShiftFixtures.singlePage)
-    wh.appendBatch(ShiftNormalizer.normalize(page), "b0")
-    val replacedId = wh.shifts.select($"shift_id").as[String].collect().min
-    val corrected = wh.shifts.filter($"shift_id" === replacedId)
-      .withColumn("shift_cost", lit(999.5).cast("decimal(13,4)"))
-    wh.upsertBatch("shifts", corrected, "b1-fix")
-    // bag compaction would merge both row versions under one seq and
-    // could resurrect the superseded row — it must refuse
-    val e = intercept[IllegalArgumentException](wh.compact())
-    assert(e.getMessage.contains("compactCurrent"))
-    wh.compactCurrent()
-    val cost = wh.currentView("shifts").filter($"shift_id" === replacedId)
-      .select($"shift_cost".cast("double")).head().getDouble(0)
-    assert(cost == 999.5, "compaction must keep the corrected version")
-    assert(wh.shifts.count() == 2, "superseded row version is vacuumed")
-    // history is collapsed and append-semantics again: plain compact works
-    wh.validateAllPks()
-    wh.compact()
-    assert(wh.currentView("shifts").count() == 2)
-  }
-
-  test("delete keys of the wrong type are rejected before anything commits") {
-    import spark.implicits._
-    val wh = new ShiftWarehouse(spark, tempDir("wh-delete-type"))
-    val page = PageSource.parsePage(spark, ShiftFixtures.singlePage)
-    wh.appendBatch(ShiftNormalizer.normalize(page), "b0")
-    // shift_id is a string PK; a LongType keys frame would write and
-    // commit fine, then poison every later read when tombstones()
-    // applies the declared schema — must fail fast instead
-    val e = intercept[IllegalArgumentException] {
-      wh.deleteRows("shifts", Seq(42L).toDF("shift_id"), "b1-bad")
-    }
-    assert(e.getMessage.contains("must be string"))
-    // nothing committed, nothing tombstoned
-    assert(wh.currentView("shifts").count() == 2)
-    wh.clear()
-  }
-
-  test("scoped delete tombstones a PK; re-insert resurrects; compaction erases") {
-    import spark.implicits._
-    val wh = new ShiftWarehouse(spark, tempDir("wh-delete"))
-    val page = PageSource.parsePage(spark, ShiftFixtures.singlePage)
-    wh.appendBatch(ShiftNormalizer.normalize(page), "b0")
-    val ids = wh.shifts.select($"shift_id").as[String].collect().sorted
-    val (dead, alive) = (ids.head, ids.last)
-    wh.deleteRows("shifts", Seq(dead).toDF("shift_id"), "b1-del")
-    // current view drops the tombstoned key; bag + as-of history keep it
-    assert(wh.currentView("shifts").select($"shift_id").as[String].collect().toSeq
-      == Seq(alive))
-    assert(wh.shifts.count() == 2)
-    assert(wh.tableAsOf("shifts", "b0").count() == 2)
-    // a LATER upsert of the same key outlives the tombstone
-    val back = wh.shifts.filter($"shift_id" === dead)
-    wh.upsertBatch("shifts", back, "b2-back")
-    assert(wh.currentView("shifts").count() == 2, "re-insert resurrects the key")
-    // delete again, then compactCurrent physically forgets the row
-    wh.deleteRows("shifts", Seq(dead).toDF("shift_id"), "b3-del")
-    intercept[IllegalArgumentException](wh.compact())
-    wh.compactCurrent()
-    assert(wh.shifts.select($"shift_id").as[String].collect().toSeq == Seq(alive),
-      "deleted row must be gone from the physical table after VACUUM")
-    assert(wh.currentView("shifts").count() == 1)
   }
 
   test("compaction collapses the batch history to one dir per table, same rows") {
@@ -297,26 +134,29 @@ class ShiftWarehouseSpec extends SparkTestBase {
       try s.toArray.map(_.toString).toSeq finally s.close()
     }
     val root = tempDir("wh-compact")
-    val wh = new ShiftWarehouse(spark, root, validatePks = false)
-    val page = PageSource.parsePage(spark, ShiftFixtures.singlePage)
-    wh.appendBatch(ShiftNormalizer.normalize(page), "b0")
-    wh.appendBatch(ShiftNormalizer.normalize(page), "b1")
-    wh.appendBatch(ShiftNormalizer.normalize(page), "b2")
+    val wh = new ShiftWarehouse(spark, root)
+    // five distinct 2-shift pages: every append passes the PK check
+    val gen = ShiftGenerator.generate(13L, LocalDate.parse("2024-04-01"), days = 10)
+    def page(i: Int) = ShiftNormalizer.normalize(
+      PageSource.parsePage(spark, ShiftGenerator.pageJson(gen, 2 * i, 2)))
+    wh.appendBatch(page(0), "b0")
+    wh.appendBatch(page(1), "b1")
+    wh.appendBatch(page(2), "b2")
     val before = wh.shifts.count()
     assert(before === 6)
+    val breaks = wh.breaks.count()
 
     val cid = wh.compact()
     assert(wh.shifts.count() === before, "current reads unchanged")
-    assert(wh.breaks.count() === 6)
+    assert(wh.breaks.count() === breaks)
     assert(wh.committedBatches === Seq(cid), "history rewritten to one batch")
     assert(ls(root, "shifts").size === 1, "one batch dir expected")
     assert(ls(root, "shifts", s"batch=$cid").count(_.endsWith(".parquet")) === 1,
       "coalesced to one data file")
 
     // the warehouse keeps working after compaction: appends sequence on
-    wh.appendBatch(ShiftNormalizer.normalize(page), "b3")
+    wh.appendBatch(page(3), "b3")
     assert(wh.shifts.count() === 8)
-    assert(wh.tableAsOf("shifts", cid).count() === 6)
     assert(wh.committedBatches === Seq(cid, "b3"))
 
     // periodic maintenance: a SECOND compaction must work (review r6 —
@@ -326,7 +166,7 @@ class ShiftWarehouseSpec extends SparkTestBase {
     assert(wh.shifts.count() === 8, "re-compaction preserves all rows")
     assert(wh.committedBatches === Seq(cid2))
     assert(ls(root, "shifts").size === 1)
-    wh.appendBatch(ShiftNormalizer.normalize(page), "b4")
+    wh.appendBatch(page(4), "b4")
     assert(wh.shifts.count() === 10)
   }
 

@@ -1,7 +1,10 @@
 package graft.queries
 
-import graft.SparkTestBase
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.SparkTestBase
+import graft.queries.Similarity.{NumQueries, PqM, PqStride, PqSub, corpusVectors, pqCodebook}
 
 /** Parity pins for the native PQ encode/score kernels.
   *
@@ -16,10 +19,75 @@ import org.apache.spark.sql.functions._
   */
 class PqParitySpec extends SparkTestBase {
 
+  /** Fixed-association 4-term subspace expression over full vectors
+    * with 1-based index arithmetic (identical string shape on the
+    * DuckDB side): ((t0 op t1) + t2) + t3. */
+  private def pqTerms(term: Int => String): String =
+    (0 until PqSub).map(term).reduce((a, b) => s"($a + $b)")
+
+  /** Per-subspace squared L2 distance (encode side), 9-dp decimal. */
+  private def pqDist2Expr(x: String, c: String): String = {
+    val t = pqTerms { j =>
+      val xi = s"element_at($x, $PqSub*m + ${j + 1})"
+      val ci = s"element_at($c, $PqSub*m + ${j + 1})"
+      s"($xi - $ci) * ($xi - $ci)"
+    }
+    s"cast(round($t, 9) as decimal(18,9))"
+  }
+
+  /** Per-subspace partial inner product (LUT side), 9-dp decimal. */
+  private def pqDotExpr(x: String, c: String): String = {
+    val t = pqTerms { j =>
+      s"element_at($x, $PqSub*m + ${j + 1}) * element_at($c, $PqSub*m + ${j + 1})"
+    }
+    s"cast(round($t, 9) as decimal(12,9))"
+  }
+
+  /** The relational encode the pq_encode kernel replaced — the parity
+    * reference: the kernel-built staged table must equal this
+    * row-for-row on the real corpus, which is what certifies the
+    * kernel's replicated round-9 decimal chain (and keeps the unchanged
+    * DuckDB oracle honest). */
+  private def pqCodesReference(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    val emb = corpusVectors(spark, sfDir)
+    val pairs = emb.crossJoin(broadcast(pqCodebook(emb)))
+      .select($"vec_id", $"v", $"cid", $"cv",
+        explode(sequence(lit(0), lit(PqM - 1))).as("m"))
+      .select($"vec_id", $"m", $"cid",
+        expr(pqDist2Expr("v", "cv")).as("d2"))
+    graft.plans.TopKPerGroup.topKPerGroup(pairs,
+        Seq($"vec_id", $"m"), Seq($"d2".asc, $"cid".asc), 1)
+      .select($"vec_id", $"m", ($"cid" / PqStride).cast("int").as("ci"))
+      .groupBy($"vec_id")
+      .agg(transform(array_sort(collect_list(struct($"m", $"ci"))),
+        x => x.getField("ci")).as("codes"))
+  }
+
+  /** The relational LUT the pq_lut kernel replaced — parity reference,
+    * like [[pqCodesReference]]. */
+  private def pqLutReference(spark: SparkSession, sfDir: String): DataFrame = {
+    val emb = corpusVectors(spark, sfDir)
+    import emb.sparkSession.implicits._
+    emb.filter($"vec_id" < NumQueries)
+      .crossJoin(broadcast(pqCodebook(emb)))
+      .select($"vec_id".as("query_id"), $"cid", $"v", $"cv",
+        explode(sequence(lit(0), lit(PqM - 1))).as("m"))
+      .select($"query_id", $"m", ($"cid" / PqStride).cast("int").as("ci"),
+        expr(pqDotExpr("v", "cv")).as("pdot"))
+      // decimal(12,9) × 10^9 is exactly integral: the long IS the 9-dp
+      // value, no float ever touches the packed table
+      .select($"query_id", $"m", $"ci",
+        ($"pdot" * lit(1000000000L)).cast("long").as("p"))
+      .groupBy($"query_id")
+      .agg(transform(array_sort(collect_list(struct($"m", $"ci", $"p"))),
+        x => x.getField("p")).as("lut"))
+  }
+
   test("kernel-built PQ codes equal the relational encode row-for-row") {
     for (sfDir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val kernel = Similarity.pqCodes(spark, sfDir)
-      val reference = Similarity.pqCodesReference(spark, sfDir)
+      val reference = pqCodesReference(spark, sfDir)
       assert(kernel.count() === reference.count(), sfDir)
       val diff = kernel.join(reference.withColumnRenamed("codes", "ref"),
           Seq("vec_id"))
@@ -31,7 +99,7 @@ class PqParitySpec extends SparkTestBase {
   test("kernel-built PQ LUT equals the relational LUT row-for-row") {
     for (sfDir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val kernel = Similarity.pqLut(spark, sfDir)
-      val reference = Similarity.pqLutReference(spark, sfDir)
+      val reference = pqLutReference(spark, sfDir)
       assert(kernel.count() === reference.count(), sfDir)
       val diff = kernel.join(reference.withColumnRenamed("lut", "ref"),
           Seq("query_id"))
