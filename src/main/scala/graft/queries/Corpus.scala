@@ -885,10 +885,10 @@ object Corpus {
     // not the node count). The alternating-star operator stays the right
     // tool for PAIR-scale graphs (duplicate clusters); here its per-round
     // scheduler cost (measured 6.6 s) dwarfs a millisecond union-find.
-    // The bound is ENFORCED, not assumed: DriverComponents counts the
-    // contracted edges and falls back to the distributed operator over
-    // its cap, so a pathological feature distribution degrades to a
-    // slower plan instead of a silent driver OOM (review r11).
+    // The bound is ENFORCED, not assumed: DriverComponents collects at
+    // most cap + 1 contracted edges and falls back to the distributed
+    // operator over its cap, so a pathological feature distribution
+    // degrades to a slower plan instead of a silent driver OOM (review r11).
     val coreLab = stage("corelab", () => {
       val labels = graft.operators.DriverComponents.minLabels(cellEdges)
         .toDF("rep", "lbl")

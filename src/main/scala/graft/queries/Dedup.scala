@@ -1680,22 +1680,18 @@ object Dedup {
   private val KCoreK = 2
   private val KCoreRounds = 4
 
-  /** Driver cap for the k-core kernel — the q_dup_pagerank rule: the
-    * duplicate subgraph is ≪ corpus; under the cap the fixed peeling
-    * rounds run as exact integer arithmetic on the driver (one collect
-    * of the staged pair table, zero per-round Spark jobs), over it the
-    * distributed loop below runs verbatim. */
-  private val KCoreEdgeCap = 2000000
+  def qDupKcore(spark: SparkSession, sfDir: String): DataFrame =
+    kcore(nearDupPairs(spark, sfDir).select("doc_a", "doc_b"), cap = 2000000)
 
-  def qDupKcore(spark: SparkSession, sfDir: String): DataFrame = {
+  /** q_dup_kcore over a (doc_a, doc_b) pair frame, on the driver while
+    * the pair table has ≤ `cap` rows. Both paths run the same fixed
+    * rounds over the same integer degrees: each round recounts edges
+    * among the survivors. */
+  private[graft] def kcore(e: DataFrame, cap: Long): DataFrame = {
+    val spark = e.sparkSession
     import spark.implicits._
-    val e = nearDupPairs(spark, sfDir).select($"doc_a", $"doc_b")
-    val capped = e.limit(KCoreEdgeCap + 1).collect()
-    if (capped.length <= KCoreEdgeCap) {
-      // driver kernel: same fixed rounds, same integer degrees — each
-      // round recounts edges among survivors, exactly the join+agg below
-      val sym = capped.flatMap(r => Seq((r.getLong(0), r.getLong(1)),
-        (r.getLong(1), r.getLong(0))))
+    graft.operators.DriverKernel.capped(e.as[(Long, Long)], cap) { pairs =>
+      val sym = pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }
       var deg: Map[Long, Long] =
         sym.groupBy(_._1).map { case (n, es) => n -> es.length.toLong }
       for (_ <- 1 to KCoreRounds) {
@@ -1705,7 +1701,7 @@ object Dedup {
       }
       deg.toSeq.collect { case (n, d) if d >= KCoreK => (n, d) }
         .sortBy(_._1).toDF("doc_id", "core_degree")
-    } else {
+    } {
       val sym = e.select($"doc_a".as("src"), $"doc_b".as("dst"))
         .unionByName(e.select($"doc_b".as("src"), $"doc_a".as("dst")))
         .localCheckpoint(eager = false) // re-joined every round
@@ -1773,59 +1769,34 @@ object Dedup {
   // (deeper fixpoints get lineage cuts exactly like the CC operator's
   // star rounds). Nodes and edges here are the DUPLICATE subgraph
   // (≪ corpus at any realistic dup rate), maintained by the same
-  // staging as every other pair-table consumer. The degree-annotated
-  // edge list is iteration-INVARIANT, so it is computed once behind a
-  // lazy localCheckpoint (the CC pattern): without the cut, every
-  // iteration's plan re-derives edges⋈deg from the staged pair scan —
-  // 7 scans of the pair table for 3 iterations, measured ~2× the query
-  // time at sf0.1.
+  // staging as every other pair-table consumer. A rank is bounded by
+  // the conserved total N·PrScale, so the BIGINT rank is safe while
+  // N < 2^63/PrScale ≈ 9.2M dup-graph nodes; beyond that, drop PrScale.
   private val PrScale = 1000000000000L // 10^12 fixed-point
   private val PrIters = 3
 
-  def qDupPagerank(spark: SparkSession, sfDir: String): DataFrame = {
+  def qDupPagerank(spark: SparkSession, sfDir: String): DataFrame =
+    dupPagerank(nearDupPairs(spark, sfDir).select("doc_a", "doc_b"),
+      graft.operators.DriverComponents.DefaultEdgeCap)
+
+  /** q_dup_pagerank over a (doc_a, doc_b) pair frame, on the driver
+    * while the symmetric edge list has ≤ `cap` rows; `r div deg` is the
+    * w = 1 case of the weighted power iteration. */
+  private[graft] def dupPagerank(pairs: DataFrame, cap: Long): DataFrame = {
+    val spark = pairs.sparkSession
     import spark.implicits._
-    val pairs = nearDupPairs(spark, sfDir).select($"doc_a", $"doc_b")
-    val edges = pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
-      .union(pairs.select($"doc_b".as("src"), $"doc_a".as("dst")))
-    // capped driver kernel (the DriverComponents limit(cap+1) contract,
-    // opt guide §1.2): the dup subgraph's edge list is duplicate-scale,
-    // so under the cap the 3 damped rounds run locally over the one
-    // collected list — identical exact integers, ~6 fewer shuffle
-    // stages; over the cap the distributed loop below is the answer.
-    val capInt = math.min(graft.operators.DriverComponents.DefaultEdgeCap,
-      Int.MaxValue - 2L).toInt
-    val local = edges.limit(capInt + 1).as[(Long, Long)].collect()
-    if (local.length <= capInt) {
-      return graft.operators.PowerIteration
-        .damped(local.map { case (s, d) => (s, d, 1L) }.toSeq, PrScale, PrIters)
-        .toSeq.map { case (node, r) =>
-          (node, r.toDouble / PrScale.toDouble)
-        }.toDF("doc_id", "rank")
+    val edges = pairs.select($"doc_a".as("src"), $"doc_b".as("dst"), lit(1L).as("w"))
+      .union(pairs.select($"doc_b".as("src"), $"doc_a".as("dst"), lit(1L).as("w")))
+    graft.operators.DriverKernel.capped(edges.as[(Long, Long, Long)], cap) { local =>
+      graft.operators.PowerIteration
+        .damped(local.toSeq, PrScale, PrIters, damping = 85)
+        .toSeq.map { case (node, r) => (node, r.toDouble / PrScale.toDouble) }
+        .toDF("doc_id", "rank")
+    } {
+      graft.operators.PowerIteration
+        .dampedDistributed(edges, PrScale, PrIters, damping = 85)
+        .select($"node".as("doc_id"), ($"r".cast("double") / PrScale.toDouble).as("rank"))
     }
-    val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-    val ed = edges.join(deg, Seq("src")).localCheckpoint(eager = false)
-    var r = ed.select($"src".as("node"), lit(PrScale).as("r")).distinct()
-    for (_ <- 1 to PrIters) {
-      // review r9 (judge item 7): sum(c) and 85·sum over LONGs wrap
-      // silently in non-ANSI Spark once a hub's incoming mass nears
-      // 2^63/85, while DuckDB's sum(BIGINT) is already HUGEINT — the
-      // engines would diverge exactly on the pathological graphs where
-      // the number matters. The sum and damping multiply now run in
-      // decimal(38,0) (exact, 128-bit-backed) and only the final
-      // already-bounded rank narrows back to long. Per-node rank is
-      // bounded by the conserved total N·PrScale, so the long cast is
-      // safe while N < 2^63/PrScale ≈ 9.2M dup-graph nodes — beyond
-      // that, drop PrScale (a documented scale lever, not a silent
-      // wrap).
-      r = ed.join(r, $"src" === $"node")
-        .select($"dst", expr("r div deg").as("c"))
-        .groupBy($"dst")
-        .agg(expr(s"${15L * PrScale / 100} + " +
-          "CAST((85 * sum(CAST(c AS DECIMAL(38,0)))) div 100 AS BIGINT)").as("r"))
-        .select($"dst".as("node"), $"r")
-    }
-    r.select($"node".as("doc_id"),
-      ($"r".cast("double") / PrScale.toDouble).as("rank"))
   }
 
   val qDupPagerankSql: String = {

@@ -985,26 +985,13 @@ object Events {
       .groupBy($"src", $"dst").agg(count(lit(1)).as("n"))
       .unionByName(Seq(("^end", "^start", 1L)).toDF("src", "dst", "n"))
     // ONE distributed pass builds the aggregated kernel; the 3 power
-    // steps then run as a DRIVER-LOCAL exact-integer kernel over the
-    // collected edge table (r17: the old per-step join+groupBy chain
-    // was 9 exchanges over frames bounded by (|event types|+2)² — all
-    // scheduler overhead at any scale, since the kernel after the one
-    // corpus aggregation is geometry-bounded like DriverComponents'
-    // edge lists). Arithmetic is unchanged: r·n over exact longs with
-    // BigInt floor division (both nonnegative, so BigInt's truncation
-    // ≡ the old DECIMAL div), order-independent integer sums.
-    val edges = raw.collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val wt: Map[String, Long] = edges.groupBy(_._1)
-      .map { case (s, es) => s -> es.map(_._3).sum }
-    var rm: Map[String, Long] = wt.keysIterator.map(_ -> McScale).toMap
-    for (_ <- 1 to McIters) {
-      rm = edges.iterator
-        .filter { case (s, _, _) => rm.contains(s) }
-        .map { case (s, d, n) => d -> ((BigInt(rm(s)) * n) / wt(s)).toLong }
-        .toSeq.groupBy(_._1)
-        .map { case (d, cs) => d -> cs.map(_._2).sum }
-    }
+    // steps then run on the driver (r17: the old per-step join+groupBy
+    // chain was 9 exchanges over frames bounded by (|event types|+2)²,
+    // all scheduler overhead at any scale). The bound holds by
+    // construction, so there is no cap and no distributed fallback.
+    val edges = raw.as[(String, String, Long)].collect()
+    val rm = graft.operators.PowerIteration
+      .damped(edges.toSeq, McScale, McIters, damping = 100)
     val tr = rm.valuesIterator.sum
     rm.toSeq
       .map { case (node, r) => (node, r, r.toDouble / tr.toDouble) }

@@ -474,10 +474,6 @@ object Similarity {
     // q_pca2_power / q_pca_var_explained runs first
     "pca_model2" -> ((s, d) => { pcaModel2(s, d); () }))
 
-  /** All-in-one hook (tests and non-bench callers). */
-  def prewarmStaging(spark: SparkSession, sfDir: String): Unit =
-    prewarmSteps.foreach(_._2(spark, sfDir))
-
   // Learned-centroid IVF — the shipped q_ann_ivf configuration (judge
   // r7 "Next round" #5): KMeans-learned cells restore IVF's
   // clustered-data premise and measure recall 1.00 at nprobe=6 through

@@ -2064,7 +2064,7 @@ object TextOps {
     * bounded standing artifact, the same maintenance class as the
     * retrieval postings). The staging persist also serves as the
     * multi-branch lineage cut the per-call localCheckpoint provided. */
-  private def bigramCounts(spark: SparkSession, sfDir: String): DataFrame =
+  private[graft] def bigramCounts(spark: SparkSession, sfDir: String): DataFrame =
     graft.operators.Staging.persisted(spark, sfDir, "bigram_counts") {
       import spark.implicits._
       docsWide(spark, sfDir)
@@ -2156,51 +2156,39 @@ object TextOps {
   private val TrIters = 3
   private val TrTopK = 20
 
-  def qTextrank(spark: SparkSession, sfDir: String): DataFrame = {
+  def qTextrank(spark: SparkSession, sfDir: String): DataFrame =
+    textrank(bigramCounts(spark, sfDir), cap = 2 * 1000 * 1000)
+
+  /** q_textrank over the staged bigram counts, on the driver while the
+    * co-occurrence graph has ≤ `cap` edges. The top-k readout sorts by
+    * (r desc, UTF-8 term) to match both engines' binary string order. */
+  private[graft] def textrank(bigrams: DataFrame, cap: Long): DataFrame = {
+    val spark = bigrams.sparkSession
     import spark.implicits._
-    val bi = bigramCounts(spark, sfDir).filter($"a" =!= $"b")
+    val bi = bigrams.filter($"a" =!= $"b")
     val edges = bi.select($"a".as("src"), $"b".as("dst"), $"c_ab".as("w"))
       .unionByName(bi.select($"b".as("src"), $"a".as("dst"), $"c_ab".as("w")))
       .groupBy($"src", $"dst").agg(sum($"w").as("w"))
-      .localCheckpoint(eager = false) // deg, ed, and r0 all read it
-    // capped driver kernel over the vocabulary-scale co-occurrence
-    // graph (the DriverComponents contract — identical exact integers,
-    // distributed loop below as the over-cap fallback); the top-k
-    // readout sorts by (r desc, UTF-8 term) to match both engines'
-    // binary string order exactly.
-    val capInt = 2 * 1000 * 1000
-    val local = edges.limit(capInt + 1).as[(String, String, Long)].collect()
-    if (local.length <= capInt) {
-      val ranks = graft.operators.PowerIteration
-        .damped(local.toSeq, TrScale, TrIters).toSeq
+      .localCheckpoint(eager = false) // the collect and the fallback read it
+    graft.operators.DriverKernel.capped(edges.as[(String, String, Long)], cap) { local =>
+      graft.operators.PowerIteration
+        .damped(local.toSeq, TrScale, TrIters, damping = 85).toSeq
         .sortWith { case ((na, ra), (nb, rb)) =>
           if (ra != rb) ra > rb
           else graft.operators.PowerIteration.utf8Less(na, nb)
         }
         .take(TrTopK).zipWithIndex
-        .map { case ((node, r), i) =>
-          (node, i + 1, r.toDouble / TrScale.toDouble)
-        }
-      return ranks.toDF("term", "rk", "score")
-        .select($"term", $"rk".cast("int").as("rk"), $"score")
+        .map { case ((node, r), i) => (node, i + 1, r.toDouble / TrScale.toDouble) }
+        .toDF("term", "rk", "score")
+    } {
+      graft.operators.PowerIteration
+        .dampedDistributed(edges, TrScale, TrIters, damping = 85)
+        .orderBy($"r".desc, $"node").limit(TrTopK)
+        .select($"node".as("term"),
+          row_number().over(Window.orderBy($"r".desc, $"node"))
+            .cast("int").as("rk"),
+          ($"r".cast("double") / TrScale.toDouble).as("score"))
     }
-    val deg = edges.groupBy($"src").agg(sum($"w").as("wt"))
-    val ed = edges.join(deg, Seq("src")).localCheckpoint(eager = false)
-    var r = deg.select($"src".as("node"), lit(TrScale).as("r"))
-    for (_ <- 1 to TrIters) {
-      r = ed.join(r, $"src" === $"node")
-        .select($"dst",
-          expr("CAST((CAST(r AS DECIMAL(38,0)) * w) div wt AS BIGINT)").as("c"))
-        .groupBy($"dst")
-        .agg(expr(s"${15L * TrScale / 100} + " +
-          "CAST((85 * sum(CAST(c AS DECIMAL(38,0)))) div 100 AS BIGINT)").as("r"))
-        .select($"dst".as("node"), $"r")
-    }
-    r.orderBy($"r".desc, $"node").limit(TrTopK)
-      .select($"node".as("term"),
-        row_number().over(Window.orderBy($"r".desc, $"node"))
-          .cast("int").as("rk"),
-        ($"r".cast("double") / TrScale.toDouble).as("score"))
   }
 
   val qTextrankSql: String = {

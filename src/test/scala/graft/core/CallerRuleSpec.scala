@@ -58,7 +58,6 @@ class CallerRuleSpec extends AnyFunSuite {
     "Dedup.prefixCandidateCounts" -> "test seam: measures the prefix index's candidate pruning",
     "Passages.cdcReport" -> "test seam: feeds planted documents into q_cdc_dedup's core",
     "TextOps.heapsBeta" -> "test seam: feeds planted vocabularies into the Heaps-law face's core",
-    "DriverComponents.tookFallback" -> "test seam: tells the spec which path the last call took",
     "KMeans.wcss" -> "test seam: the Lloyd objective the spec checks descends",
     "Staging.trackedCorpora" -> "test seam: the spec reads the staging registry",
     "GraftColumnBridge.plannerStrategies" -> "test seam: asserts the extension's planner wiring without a new session",

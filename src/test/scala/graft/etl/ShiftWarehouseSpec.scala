@@ -73,38 +73,6 @@ class ShiftWarehouseSpec extends SparkTestBase {
       "null value in column \"break_id\" of relation \"breaks\" violates not-null constraint (batch b1)")
   }
 
-  /** Spark jobs `body` submits from this thread. The listener bus delivers
-    * events in order, so once a trailing sentinel job has been seen every
-    * job of `body` has been counted. */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val key = "graft.test.jobs"
-    val tag = java.util.UUID.randomUUID.toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some(`tag`) => jobs.incrementAndGet()
-          case Some(t) if t == s"$tag-end" => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, tag)
-      body
-      sc.setLocalProperty(key, s"$tag-end")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
-      jobs.get
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("a page commit runs at most 5 Spark jobs; zero-row tables still validate") {
     val wh = new ShiftWarehouse(spark, tempDir("wh-jobs"))
     val gen = ShiftGenerator.generate(11L, LocalDate.parse("2024-01-01"), days = 14)

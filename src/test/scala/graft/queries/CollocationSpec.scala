@@ -89,6 +89,11 @@ class CollocationSpec extends SparkTestBase {
       .as[(String, Int, Double)].collect().toSet
     assert(got == expected,
       s"missing: ${expected -- got}\nextra: ${got -- expected}")
+    // a non-empty edge list overflows cap 0, so this is the distributed path
+    assert(edges.nonEmpty)
+    val distributed = TextOps.textrank(TextOps.bigramCounts(spark, dir), cap = 0)
+      .as[(String, Int, Double)].collect().toSet
+    assert(distributed == got)
   }
 
   test("Heaps beta separates open from closed vocabularies and matches a driver recompute") {
@@ -147,13 +152,10 @@ class CollocationSpec extends SparkTestBase {
     val p1 = TextOps.qPmiCollocations(spark, dir)
       .queryExecution.executedPlan.toString
     assert(p1.contains("TakeOrderedAndProject"), p1)
-    // textrank's under-cap driver kernel cuts the top-k locally and
-    // returns a LocalTableScan; the over-cap distributed fallback keeps
-    // the TakeOrderedAndProject shape — both are bounded reads, which
-    // is what this pin protects
-    val p2 = TextOps.qTextrank(spark, dir)
+    // textrank's driver path cuts the top-k locally; its distributed
+    // path (cap 0) must keep the bounded TakeOrderedAndProject shape
+    val p2 = TextOps.textrank(TextOps.bigramCounts(spark, dir), cap = 0)
       .queryExecution.executedPlan.toString
-    assert(p2.contains("TakeOrderedAndProject") ||
-      p2.contains("LocalTableScan"), p2)
+    assert(p2.contains("TakeOrderedAndProject"), p2)
   }
 }

@@ -566,6 +566,10 @@ class CorpusOpsSpec extends SparkTestBase {
     val got = Dedup.qDupKcore(spark, sfDir)
       .as[(Long, Long)].collect().toSet
     assert(got == expected, s"got $got\nexp $expected")
+    // a non-empty pair table overflows cap 0, so this is the distributed path
+    val input = Dedup.nearDupPairs(spark, sfDir).select("doc_a", "doc_b")
+    assert(!input.isEmpty)
+    assert(Dedup.kcore(input, cap = 0).as[(Long, Long)].collect().toSet == got)
     // declared-rounds honesty: 4 peels already reach the fixpoint here
     assert(peel(2, 4) == peel(2, 8), "4 rounds not a fixpoint on this corpus")
     // the core is a strict subset of the graph's nodes at this sf (the

@@ -1694,6 +1694,11 @@ class LlmOpsSpec extends SparkTestBase {
     val got = Dedup.qDupPagerank(spark, sfDir)
       .as[(Long, Double)].collect().toSet
     assert(got == expected)
+    // a non-empty edge list overflows cap 0, so this is the distributed path
+    assert(pairs.nonEmpty)
+    val distributed = Dedup.dupPagerank(
+      Dedup.nearDupPairs(spark, sfDir).select("doc_a", "doc_b"), cap = 0)
+    assert(distributed.as[(Long, Double)].collect().toSet == got)
     // highest-centrality members concentrate inside clusters: ranks are
     // positive and someone beats the uniform start's damped floor
     assert(r.values.forall(_ > 0))

@@ -962,10 +962,12 @@ class PlanQualitySpec extends SparkTestBase {
   }
 
   test("new audit/collocation faces: no cartesian pair generation anywhere") {
+    // textrank at cap 0: the distributed plan that runs over the cap (at
+    // fixture scale the face itself is a driver-side LocalRelation)
     for (df <- Seq(Dedup.qSortedNeighborhoodMp(spark, sfDir),
         Dedup.qBlockingQuality(spark, sfDir),
         TextOps.qPmiCollocations(spark, sfDir),
-        TextOps.qTextrank(spark, sfDir))) {
+        TextOps.textrank(TextOps.bigramCounts(spark, sfDir), cap = 0))) {
       val p = plan(df)
       assert(!p.contains("CartesianProduct"), p)
       // the only nested loops allowed are 1-row totals broadcasts
