@@ -8,13 +8,14 @@ import org.apache.spark.sql.types.DecimalType
   *
   * Re-expresses the reference's row-at-a-time Python flattening
   * (`etl/app/shift_data_processor.py:62-121`) as declarative Spark plans:
-  * `explode` replaces the nested list comprehensions (the UDTF-shaped
-  * operator), higher-order `aggregate` replaces the per-row `sum(...)`
-  * for `shift_cost`, and `when`/`timestamp_seconds` replaces
-  * `parse_timestamp`. Everything stays inside whole-stage codegen — no
-  * UDFs, no shuffles: each output table is a narrow projection of the
-  * source partition it came from (parent keys propagate through `explode`,
-  * so the parent-child join is by construction, never executed).
+  * higher-order `transform` replaces the nested list comprehensions,
+  * `aggregate` replaces the per-row `sum(...)` for `shift_cost`, and
+  * `when`/`timestamp_seconds` replaces `parse_timestamp`. No UDFs, no
+  * shuffles. The output is one frame of nested shift rows, children kept
+  * inside their parent row (Dremel's record shape), so a batch is written
+  * once; the four reference tables are read-time projections of it
+  * ([[NormalizedShifts]]), and a child's `shift_id` is its parent row's,
+  * so the parent-child join is by construction, never executed.
   */
 object ShiftNormalizer {
 
@@ -36,67 +37,67 @@ object ShiftNormalizer {
   private def sumCosts(arr: Column): Column =
     aggregate(arr, lit(0.0), (acc, x) => acc + coalesce(x.getField("cost"), lit(0.0)))
 
-  /** shifts table: one row per source shift.
+  /** All four normalized tables of one page (or union of pages), as one
+    * frame of nested shift rows ([[ShiftSchemas.nestedShiftRow]]): the
+    * shifts columns, with each child list mapped in place by `transform`.
     * shift_cost = bround(Σ allowances.cost + Σ award_interpretations.cost, 4)
     * — `bround` (HALF_EVEN) mirrors Python `round` (shift_data_processor.py:78-82).
     */
-  def shifts(page: DataFrame): DataFrame = {
+  def normalize(page: DataFrame): NormalizedShifts = {
     val s = page.select(explode(col("results")).as("r")).select("r.*")
-    s.select(
+    NormalizedShifts(s.select(
       col("id").as("shift_id"),
       to_date(col("date"), "yyyy-MM-dd").as("shift_date"),
       msToTimestamp(col("start")).as("shift_start"),
       msToTimestamp(col("finish")).as("shift_finish"),
       bround(sumCosts(col("allowances")) + sumCosts(col("award_interpretations")), 4)
-        .cast(DecimalType(13, 4)).as("shift_cost"))
-  }
-
-  /** breaks table: explode with parent-key propagation
-    * (process_breaks, shift_data_processor.py:89-101). */
-  def breaks(page: DataFrame): DataFrame =
-    page.select(explode(col("results")).as("r"))
-      .select(col("r.id").as("shift_id"), explode(col("r.breaks")).as("b"))
-      .select(
-        col("b.id").as("break_id"),
-        col("shift_id"),
-        msToTimestamp(col("b.start")).as("break_start"),
-        msToTimestamp(col("b.finish")).as("break_finish"),
+        .cast(DecimalType(13, 4)).as("shift_cost"),
+      // process_breaks (shift_data_processor.py:89-101)
+      transform(col("breaks"), b => struct(
+        b.getField("id").as("break_id"),
+        msToTimestamp(b.getField("start")).as("break_start"),
+        msToTimestamp(b.getField("finish")).as("break_finish"),
         // NULL stays NULL: the reference inserts break['paid'] verbatim and
         // Postgres's DEFAULT FALSE only applies when the column is omitted,
         // never to an explicit JSON null (initdb.sql:16).
-        col("b.paid").as("is_paid"))
-
-  /** allowances table: explode + rename map {id→allowance_id, value→
-    * allowance_value, cost→allowance_cost} (shift_data_processor.py:103-108). */
-  def allowances(page: DataFrame): DataFrame =
-    page.select(explode(col("results")).as("r"))
-      .select(col("r.id").as("shift_id"), explode(col("r.allowances")).as("a"))
-      .select(
-        col("a.id").as("allowance_id"),
-        col("shift_id"),
-        col("a.value").as("allowance_value"),
-        col("a.cost").cast(DecimalType(13, 4)).as("allowance_cost"))
-
-  /** award_interpretations table: explode + rename map
-    * (shift_data_processor.py:110-115). */
-  def awardInterpretations(page: DataFrame): DataFrame =
-    page.select(explode(col("results")).as("r"))
-      .select(col("r.id").as("shift_id"), explode(col("r.award_interpretations")).as("w"))
-      .select(
-        col("w.id").as("award_id"),
-        col("shift_id"),
-        to_date(col("w.date"), "yyyy-MM-dd").as("award_date"),
-        col("w.units").as("award_units"),
-        col("w.cost").cast(DecimalType(13, 4)).as("award_cost"))
-
-  /** All four normalized tables from one page (or union of pages). */
-  def normalize(page: DataFrame): NormalizedShifts =
-    NormalizedShifts(shifts(page), breaks(page), allowances(page), awardInterpretations(page))
+        b.getField("paid").as("is_paid"))).as("breaks"),
+      // rename map {id→allowance_id, value→allowance_value,
+      // cost→allowance_cost} (shift_data_processor.py:103-108)
+      transform(col("allowances"), a => struct(
+        a.getField("id").as("allowance_id"),
+        a.getField("value").as("allowance_value"),
+        a.getField("cost").cast(DecimalType(13, 4)).as("allowance_cost"))).as("allowances"),
+      // rename map (shift_data_processor.py:110-115)
+      transform(col("award_interpretations"), w => struct(
+        w.getField("id").as("award_id"),
+        to_date(w.getField("date"), "yyyy-MM-dd").as("award_date"),
+        w.getField("units").as("award_units"),
+        w.getField("cost").cast(DecimalType(13, 4)).as("award_cost"))).as("award_interpretations")))
+  }
 }
 
-/** The four normalized tables of one batch. */
-case class NormalizedShifts(
-    shifts: DataFrame,
-    breaks: DataFrame,
-    allowances: DataFrame,
-    awardInterpretations: DataFrame)
+/** The four normalized tables of one batch, stored once as nested shift
+  * rows. Each table is a projection of `rows`: the shifts columns, or an
+  * `explode` of one child array with the parent's `shift_id`. Column
+  * names, order and types are [[ShiftWarehouse.tableSchemas]]'. */
+final case class NormalizedShifts(rows: DataFrame) {
+  lazy val shifts: DataFrame = rows.select(columns("shifts").map(col): _*)
+  lazy val breaks: DataFrame = child("breaks")
+  lazy val allowances: DataFrame = child("allowances")
+  lazy val awardInterpretations: DataFrame = child("award_interpretations")
+
+  def table(name: String): DataFrame = name match {
+    case "shifts" => shifts
+    case "breaks" => breaks
+    case "allowances" => allowances
+    case "award_interpretations" => awardInterpretations
+    case _ => throw new NoSuchElementException(s"no reference table '$name'")
+  }
+
+  private def columns(name: String): Seq[String] =
+    ShiftWarehouse.tableSchemas(name).fieldNames.toSeq
+
+  private def child(name: String): DataFrame =
+    rows.select(col("shift_id"), explode(col(name)).as("c"))
+      .select(columns(name).map(c => if (c == "shift_id") col(c) else col(s"c.$c")): _*)
+}

@@ -80,4 +80,14 @@ object ShiftSchemas {
     StructField("kpi_name", StringType),
     StructField("kpi_date", DateType),
     StructField("kpi_value", DecimalType(8, 2))))
+
+  /** The warehouse's stored form of the four tables above: one row per
+    * shift with the `shiftsTable` columns, then one array per child
+    * table, named after it. A child struct holds that table's columns
+    * less `shift_id`, which is its parent row's. */
+  val nestedShiftRow: StructType = StructType(shiftsTable.fields ++
+    Seq("breaks" -> breaksTable, "allowances" -> allowancesTable,
+      "award_interpretations" -> awardsTable).map { case (name, t) =>
+      StructField(name, ArrayType(StructType(t.fields.filterNot(_.name == "shift_id"))))
+    })
 }

@@ -2,10 +2,11 @@ package graft.etl
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.collection.immutable.ListMap
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -25,13 +26,20 @@ import graft.core.CommitProtocol.deleteRecursively
   * unreferenced batch dirs but never a partially visible batch. Readers list
   * commit markers and read exactly those batch directories.
   *
-  * Scale: batches are append-only directories (`<table>/batch=<id>`) — no
-  * rewrite of existing data on ingest. PK validation runs on the driver
-  * and adds no Spark job: each staged write observes its own keys
-  * (`Dataset.observe`), which are checked for NULLs, within-batch
-  * duplicates and duplicates against a committed-key set this instance
-  * keeps current (see [[keysFor]]). That set costs driver memory of one
-  * string per committed PK.
+  * Layout: a page batch is ONE directory of nested shift rows
+  * (`nested/batch=<id>`, [[ShiftSchemas.nestedShiftRow]]), children
+  * stored inside their parent row, so a page commit is one write job;
+  * `shifts`, `breaks`, `allowances` and `award_interpretations` are
+  * read-time projections of it ([[NormalizedShifts]]). KPI batches are
+  * flat (`kpis/batch=<id>`). Batches are append-only — no rewrite of
+  * existing data on ingest.
+  *
+  * PK validation runs on the driver and adds no Spark job: the page
+  * write observes all four tables' keys and NULL-key counts in one
+  * `Dataset.observe`, and they are checked, in table order, for NULLs,
+  * within-batch duplicates and duplicates against a committed-key set
+  * this instance keeps current (see [[keysFor]]). That set costs driver
+  * memory of one string per committed PK.
   */
 final class ShiftWarehouse(spark: SparkSession, root: String) {
 
@@ -80,45 +88,74 @@ final class ShiftWarehouse(spark: SparkSession, root: String) {
   /** Committed batch ids, in commit order. */
   private[graft] def committedBatches: Seq[String] = committedMarkers().map(_._2)
 
-  /** Read one normalized table (committed batches only). Empty-but-typed
-    * DataFrame when nothing has been committed. */
-  def table(name: String): DataFrame = {
-    val schema = tableSchemas(name)
-    val dirs = committedBatches
-      .map(b => rootPath.resolve(name).resolve(s"batch=$b"))
-      .filter(Files.isDirectory(_))
-      .map(_.toString)
-    if (dirs.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  private def batchDir(dir: String, batchId: String): Path =
+    rootPath.resolve(dir).resolve(s"batch=$batchId")
+
+  /** Every committed batch's data dir as (dir, path), in commit order. A
+    * batch has exactly one: `nested` for a page, `kpis` for KPI rows. A
+    * marker with none fails the read by name, like the marker grammar. */
+  private def committedDirs(): Seq[(String, Path)] = committedMarkers().map { case (seq, id) =>
+    Seq(NestedDir, KpisDir).map(d => d -> batchDir(d, id)).filter(d => Files.isDirectory(d._2)) match {
+      case Seq(one) => one
+      case found => throw new IllegalStateException(
+        s"commit marker '$seq.$id' in $commitsDir has ${found.size} data dirs, " +
+          s"expected one of $NestedDir/batch=$id and $KpisDir/batch=$id")
+    }
+  }
+
+  /** The committed batches of one dir kind, read with its explicit
+    * schema; empty-but-typed when there are none. */
+  private def read(dir: String, schema: StructType): DataFrame = {
+    val dirs = committedDirs().collect { case (`dir`, p) => p.toString }
+    if (dirs.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     else spark.read.schema(schema).parquet(dirs: _*)
   }
+
+  /** Read one normalized table (committed batches only): `kpis` as
+    * stored, the four reference tables as projections of the committed
+    * nested shift rows. Empty-but-typed when nothing has been committed. */
+  def table(name: String): DataFrame =
+    if (name == KpisDir) read(KpisDir, ShiftSchemas.kpisTable) else normalized.table(name)
 
   def shifts: DataFrame = table("shifts")
   def breaks: DataFrame = table("breaks")
   def allowances: DataFrame = table("allowances")
   def awardInterpretations: DataFrame = table("award_interpretations")
-  def kpis: DataFrame = table("kpis")
+  def kpis: DataFrame = table(KpisDir)
 
-  def normalized: NormalizedShifts =
-    NormalizedShifts(shifts, breaks, allowances, awardInterpretations)
+  /** The four reference tables as projections of one read of the
+    * committed nested rows. */
+  def normalized: NormalizedShifts = NormalizedShifts(read(NestedDir, ShiftSchemas.nestedShiftRow))
 
-  /** Atomically append one batch across the four normalized tables.
-    * Validates the PKs (not NULL, unique within the batch and against
-    * committed data) before anything becomes visible; any failure
-    * discards the staging area — the reference's rollback. */
+  /** Atomically append one batch of the four normalized tables: one write
+    * of its nested rows, which observes every table's keys. Validates the
+    * PKs (not NULL, unique within the batch and against committed data)
+    * before anything becomes visible; any failure discards the staging
+    * area — the reference's rollback. */
   def appendBatch(batch: NormalizedShifts, batchId: String): Unit = {
-    val tables = Seq(
-      "shifts" -> batch.shifts,
-      "breaks" -> batch.breaks,
-      "allowances" -> batch.allowances,
-      "award_interpretations" -> batch.awardInterpretations)
-    appendTables(tables, batchId)
+    val obs = Observation()
+    val observed = batch.rows.observe(obs, keyAggregates.head, keyAggregates.tail: _*)
+    appendTables(NestedDir, observed, batchId) { markers =>
+      // bounded: an observation whose listener event is lost must fail the
+      // page, not hang the writer
+      val m = Await.result(obs.future, ObservationWait)
+      val committed = keysFor(markers)
+      Some(committed.plus(Nil, pkColumns.toSeq.map { case (name, pk) =>
+        name -> checkedKeys(name, pk, m, committed(name), batchId)
+      }))
+    }
   }
 
   /** Append KPI rows as their own committed batch. */
   def appendKpis(kpiRows: DataFrame, batchId: String): Unit =
-    appendTables(Seq("kpis" -> kpiRows), batchId)
+    appendTables(KpisDir, kpiRows, batchId)(_ => None)
 
-  private def appendTables(tables: Seq[(String, DataFrame)], batchId: String): Unit = {
+  /** Stage `frame` as `<dir>/batch=<batchId>`, validate it, then publish
+    * with the commit marker last. `validate` gets the commit listing and
+    * returns the committed keys including this batch's (None: the frame
+    * has no PKs), or throws to roll the batch back. */
+  private def appendTables(dir: String, frame: DataFrame, batchId: String)(
+      validate: Seq[(String, String)] => Option[CommittedKeys]): Unit = {
     validateBatchId(batchId)
     // one listing serves the already-committed check, the key-set
     // catch-up and the marker's sequence (single writer)
@@ -127,41 +164,24 @@ final class ShiftWarehouse(spark: SparkSession, root: String) {
     val marker = (f"${nextSeq(markers)}%08d", batchId)
     val staging = stagingDir(batchId)
     val validated = try {
-      val observed = tables.flatMap { case (name, df) =>
-        val obs = pkColumns.get(name).map(_ -> Observation())
-        obs.fold(df) { case (pk, o) =>
-          df.observe(o, collect_list(col(pk)).as("keys"),
-            count(when(col(pk).isNull, 1)).as("nulls"))
-        }.write.mode("overwrite").parquet(staging.resolve(name).toString)
-        obs.map { case (pk, o) => (name, pk, o) }
-      }
-      if (observed.isEmpty) None
-      else {
-        val committed = keysFor(markers)
-        Some(committed -> observed.map { case (name, pk, o) =>
-          name -> checkedKeys(name, pk, o, committed(name), batchId)
-        })
-      }
+      frame.write.mode("overwrite").parquet(staging.resolve(dir).toString)
+      validate(markers)
     } catch {
       // a stage/validate failure discards the staging area — nothing
       // was ever visible (the reference's rollback)
       case e: Throwable => deleteRecursively(staging); throw e
     }
-    // Publish through the shared protocol: move staged dirs into
+    // Publish through the shared protocol: move the staged dir into
     // place, then the commit marker last (single-writer, like the
-    // reference's one ETL process). Rollback of moved-but-unmarked
-    // dirs lives in CommitProtocol.
+    // reference's one ETL process). Rollback of a moved-but-unmarked
+    // dir lives in CommitProtocol.
     graft.core.CommitProtocol.publish(staging,
-      tables.map { case (name, _) =>
-        staging.resolve(name) -> rootPath.resolve(name).resolve(s"batch=$batchId")
-      }) {
+      Seq(staging.resolve(dir) -> batchDir(dir, batchId))) {
       Files.createDirectories(commitsDir)
       Files.createFile(commitsDir.resolve(s"${marker._1}.$batchId"))
       ()
     }
-    validated.foreach { case (committed, batchKeys) =>
-      knownKeys = committed.plus(Seq(marker), batchKeys)
-    }
+    validated.foreach(keys => knownKeys = keys.plus(Seq(marker), Nil))
   }
 
   /** Committed PKs as of the last [[keysFor]] or commit of this instance. */
@@ -172,36 +192,31 @@ final class ShiftWarehouse(spark: SparkSession, root: String) {
     * covered marker that is gone (`clear`, `compact`, an external
     * change) discards it. Markers not yet covered — first use on an
     * existing root, batches another writer committed — are read with
-    * one PK-column scan of only their batch dirs. */
+    * one key scan of only their nested dirs. */
   private def keysFor(markers: Seq[(String, String)]): CommittedKeys = {
     val held = Some(knownKeys).filter(_.covered.subsetOf(markers.toSet))
       .getOrElse(CommittedKeys.empty)
     val missing = markers.filterNot(held.covered)
-    val scans = pkColumns.toSeq.flatMap { case (name, pk) =>
-      val dirs = missing.map(m => rootPath.resolve(name).resolve(s"batch=${m._2}"))
-        .filter(Files.isDirectory(_)).map(_.toString)
-      if (dirs.isEmpty) None
-      else Some(spark.read.schema(tableSchemas(name)).parquet(dirs: _*)
-        .where(col(pk).isNotNull).select(lit(name), col(pk)))
+    val dirs = missing.map(m => batchDir(NestedDir, m._2)).filter(Files.isDirectory(_))
+      .map(_.toString)
+    val found = if (dirs.isEmpty) Nil else {
+      val m = spark.read.schema(ShiftSchemas.nestedShiftRow).parquet(dirs: _*)
+        .agg(keyAggregates.head, keyAggregates.tail: _*).head()
+      pkColumns.keys.map(name => name -> keyList(m, name).filter(_ != null))
     }
-    val found = scans.reduceOption(_ union _).toSeq.flatMap(_.collect())
-      .groupMap(_.getString(0))(_.getString(1))
     knownKeys = held.plus(missing, found)
     knownKeys
   }
 
-  /** A staged write's observed keys, checked the way the reference's
-    * `PRIMARY KEY` columns are: not NULL, unique within the batch and
-    * not already committed. */
-  private def checkedKeys(name: String, pk: String, obs: Observation,
+  /** Observed keys, checked the way the reference's `PRIMARY KEY`
+    * columns are: not NULL, unique within the batch and not already
+    * committed. */
+  private def checkedKeys(name: String, pk: String, m: Row,
       committed: Set[String], batchId: String): Seq[String] = {
-    // bounded: an observation whose listener event is lost must fail the
-    // page, not hang the writer
-    val m = Await.result(obs.future, ObservationWait)
-    if (m.getAs[Long]("nulls") > 0)
+    if (m.getAs[Long](s"${name}_nulls") > 0)
       throw new IllegalStateException(
         s"""null value in column "$pk" of relation "$name" violates not-null constraint (batch $batchId)""")
-    val keys = m.getAs[scala.collection.Seq[String]]("keys").toSeq
+    val keys = keyList(m, name)
     val seen = scala.collection.mutable.HashSet.empty[String]
     keys.find(k => !seen.add(k)).orElse(keys.find(committed))
       .foreach(v => throw new IllegalStateException(
@@ -209,16 +224,17 @@ final class ShiftWarehouse(spark: SparkSession, root: String) {
     keys
   }
 
-  /** Compact the committed history into ONE batch per table — the
-    * small-files maintenance a long ingest needs: per-page commits
-    * accumulate a directory (and shuffle-partition-many files) per
-    * batch, and scan planning degrades with file count long before data
-    * size matters. A bag fold: every table's rows, unioned over its
-    * committed batches. Semantics:
+  /** Compact the committed history into ONE batch per dir kind: the
+    * nested shift rows fold into one batch, the KPI rows into another —
+    * the small-files maintenance a long ingest needs: per-page commits
+    * accumulate a directory (and its files) per batch, and scan planning
+    * degrades with file count long before data size matters. A bag
+    * fold: every dir kind's rows, unioned over its committed batches.
+    * Semantics:
     *
     *  - Equivalent reads: `table(name)` returns the same rows before and
     *    after (asserted in the spec); files collapse to `numFiles` per
-    *    table.
+    *    dir kind.
     *  - History REWRITE: like VACUUM/OPTIMIZE in table formats, prior
     *    batch ids disappear.
     *  - Crash-safe ordering (review r6): stage → publish new dirs →
@@ -227,15 +243,16 @@ final class ShiftWarehouse(spark: SparkSession, root: String) {
     *    by the next compact); a crash after it leaves reads correct
     *    with orphaned history dirs. Old data is never deleted before
     *    its replacement is durable. The only unsafe window is the
-    *    two-file marker swap itself (reads see empty tables; all data
-    *    still on disk).
+    *    marker swap itself (reads see empty tables; all data still on
+    *    disk).
     *  - Single-writer, like append: the marker swap is not atomic for
     *    concurrent READERS; the reference's one-ETL-process discipline
     *    applies. A table-format transaction log would make it a single
     *    swap — out of scope for a parquet warehouse.
     *
-    * Returns the committed compacted batch id (unique per run, so
-    * periodic re-compaction works).
+    * Returns the compacted batch id (unique per run, so periodic
+    * re-compaction works): the nested rows commit under it, and the KPI
+    * rows, if any, under `<id>-kpis`.
     */
   def compact(numFiles: Int = 1): String = {
     // unique id per run so compaction is re-runnable (a fixed id would
@@ -248,17 +265,17 @@ final class ShiftWarehouse(spark: SparkSession, root: String) {
     val base = nextSeq()
     val committed = committedBatches.toSet
     val batchId = Iterator.from(0).map(k => s"compacted-${base + k}")
-      .find(id => !committed.contains(id)).get
-    val liveTables = tableSchemas.keys.toSeq.sorted
-      .map(n => n -> table(n))
-      .filter(_._2.take(1).nonEmpty)
-    if (liveTables.isEmpty) return batchId
+      .find(id => !committed(id) && !committed(s"$id-kpis")).get
+    val live = Seq(
+      (NestedDir, batchId, read(NestedDir, ShiftSchemas.nestedShiftRow)),
+      (KpisDir, s"$batchId-kpis", read(KpisDir, ShiftSchemas.kpisTable)))
+      .filter(_._3.take(1).nonEmpty)
+    if (live.isEmpty) return batchId
     val staging = stagingDir(batchId)
     try {
       // 1. stage the union of every committed batch, coalesced
-      liveTables.foreach { case (name, df) =>
-        df.coalesce(numFiles).write.mode("overwrite")
-          .parquet(staging.resolve(name).toString)
+      live.foreach { case (dir, _, df) =>
+        df.coalesce(numFiles).write.mode("overwrite").parquet(staging.resolve(dir).toString)
       }
       // 2. PUBLISH through the shared protocol: move staged dirs into
       // place while the old markers (and old dirs) are untouched — a
@@ -266,28 +283,27 @@ final class ShiftWarehouse(spark: SparkSession, root: String) {
       // were, and the new dirs are invisible orphans the protocol (or
       // the next compaction) clears. Old data is never deleted before
       // the replacement is durable (review r6 #1/#3).
-      require(!committedBatches.contains(batchId),
+      require(!live.exists(l => committedBatches.contains(l._2)),
         s"batch $batchId already committed")
       val oldMarkers = listDir(commitsDir)
       graft.core.CommitProtocol.publish(staging,
-        liveTables.map { case (name, _) =>
-          staging.resolve(name) -> rootPath.resolve(name).resolve(s"batch=$batchId")
-        }) {
-        // 3. marker swap: retire old markers, then commit the new one.
-        // The only non-crash-safe window is between these two marker
-        // ops (reads see EMPTY tables, all data still on disk) — the
-        // documented single-writer caveat, a two-file window.
+        live.map { case (dir, id, _) => staging.resolve(dir) -> batchDir(dir, id) }) {
+        // 3. marker swap: retire old markers, then commit the new ones.
+        // The only non-crash-safe window is between these marker ops
+        // (reads see EMPTY tables, all data still on disk) — the
+        // documented single-writer caveat.
         oldMarkers.foreach(Files.deleteIfExists(_))
         Files.createDirectories(commitsDir)
-        Files.createFile(commitsDir.resolve(f"${nextSeq()}%08d.$batchId"))
-        ()
+        live.foreach { case (_, id, _) =>
+          Files.createFile(commitsDir.resolve(f"${nextSeq()}%08d.$id"))
+        }
       }
-      // 4. garbage-collect LAST: every batch dir not owned by the new
+      // 4. garbage-collect LAST: every batch dir not owned by a new
       // marker is retired history or an orphan from a prior crash —
       // both invisible to readers by now.
-      liveTables.foreach { case (name, _) =>
-        val dest = rootPath.resolve(name).resolve(s"batch=$batchId")
-        listDir(rootPath.resolve(name))
+      live.foreach { case (dir, id, _) =>
+        val dest = batchDir(dir, id)
+        listDir(rootPath.resolve(dir))
           .filter(p => p.getFileName.toString.startsWith("batch=") && p != dest)
           .foreach(deleteRecursively)
       }
@@ -302,19 +318,36 @@ final class ShiftWarehouse(spark: SparkSession, root: String) {
 
 object ShiftWarehouse {
 
+  /** The dir that holds each page batch: nested shift rows. */
+  private val NestedDir = "nested"
+  /** The dir that holds each KPI batch, named after its table. */
+  private val KpisDir = "kpis"
+
   val tableSchemas: Map[String, StructType] = Map(
     "shifts" -> ShiftSchemas.shiftsTable,
     "breaks" -> ShiftSchemas.breaksTable,
     "allowances" -> ShiftSchemas.allowancesTable,
     "award_interpretations" -> ShiftSchemas.awardsTable,
-    "kpis" -> ShiftSchemas.kpisTable)
+    KpisDir -> ShiftSchemas.kpisTable)
 
-  /** PKs per initdb.sql:4,12,22,31. */
-  val pkColumns: Map[String, String] = Map(
+  /** PKs per initdb.sql:4,12,22,31, in the order a commit checks them. */
+  val pkColumns: ListMap[String, String] = ListMap(
     "shifts" -> "shift_id",
     "breaks" -> "break_id",
     "allowances" -> "allowance_id",
     "award_interpretations" -> "award_id")
+
+  /** Per reference table, its key list (`<table>_keys`, NULLs kept) and
+    * NULL-key count (`<table>_nulls`) over a frame of nested shift rows:
+    * the aggregates a page write observes and the key catch-up scans. */
+  private val keyAggregates: Seq[Column] = pkColumns.toSeq.flatMap { case (name, pk) =>
+    val ids = if (name == "shifts") array(col(pk)) else transform(col(name), _.getField(pk))
+    Seq(flatten(collect_list(ids)).as(s"${name}_keys"),
+      coalesce(sum(array_size(filter(ids, _.isNull))), lit(0L)).as(s"${name}_nulls"))
+  }
+
+  private def keyList(m: Row, name: String): Seq[String] =
+    m.getAs[scala.collection.Seq[String]](s"${name}_keys").toSeq
 
   private val ObservationWait = 2.minutes
 

@@ -48,11 +48,7 @@ object ShiftsEtl {
     require(!warehouse.committedBatches.exists(owned),
       s"runId '$runId' already has committed batches; choose a fresh runId")
     pages.grouped(pagesPerBatch).zipWithIndex.foreach { case (grp, i) =>
-      // cache the raw page: all four normalized tables derive from it, and
-      // without the cache each table write re-parses the page (4 jobs/page)
-      val batch = grp.reduce(_ union _).persist()
-      try warehouse.appendBatch(ShiftNormalizer.normalize(batch), f"$runId-p$i%05d")
-      finally batch.unpersist()
+      warehouse.appendBatch(ShiftNormalizer.normalize(grp.reduce(_ union _)), f"$runId-p$i%05d")
     }
     val kpis = ShiftKpis.all(warehouse.normalized, asOfDate)
     warehouse.appendKpis(kpis, s"$runId-kpis")

@@ -60,11 +60,8 @@ object EventStream {
       runId: String = "stream"): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     pages.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val id = f"$runId-b$batchId%08d"
-      if (!warehouse.committedBatches.contains(id)) {
-        val cached = batch.persist()
-        try warehouse.appendBatch(graft.etl.ShiftNormalizer.normalize(cached), id)
-        finally { cached.unpersist(); () }
-      }
+      if (!warehouse.committedBatches.contains(id))
+        warehouse.appendBatch(graft.etl.ShiftNormalizer.normalize(batch), id)
     }
 
   /** Streaming exact dedup by event id: watermark-bounded state keyed by

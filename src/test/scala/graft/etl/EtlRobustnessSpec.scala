@@ -84,7 +84,7 @@ class EtlRobustnessSpec extends SparkTestBase {
         |  "breaks": [{"id": "b1", "start": 1698827400000, "finish": 1698828600000, "paid": null}],
         |  "allowances": [], "award_interpretations": []}]}""".stripMargin
     val page = PageSource.parsePage(spark, json)
-    val rows = ShiftNormalizer.breaks(page).select("is_paid").collect()
+    val rows = ShiftNormalizer.normalize(page).breaks.select("is_paid").collect()
     assert(rows.length == 1 && rows.head.isNullAt(0),
       "explicit JSON null must stay NULL (Postgres DEFAULT only applies to omitted columns)")
   }

@@ -38,7 +38,7 @@ class ShiftNormalizerSpec extends SparkTestBase {
            "breaks": [], "allowances": [], "award_interpretations": []}],
           "links": {"base": "b", "prev": null, "next": null},
           "start": 0, "limit": 1, "size": 1}""".replaceAll("\n\\s*", " ")
-    val s = ShiftNormalizer.shifts(PageSource.parsePage(spark, json)).collect().head
+    val s = ShiftNormalizer.normalize(PageSource.parsePage(spark, json)).shifts.collect().head
     assert(s.isNullAt(s.fieldIndex("shift_start")))
     assert(s.isNullAt(s.fieldIndex("shift_finish")))
   }

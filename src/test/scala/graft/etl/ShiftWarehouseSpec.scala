@@ -21,9 +21,39 @@ class ShiftWarehouseSpec extends SparkTestBase {
       wh.appendBatch(ShiftNormalizer.normalize(page), "20240102.late")
     }
     assert(e.getMessage.contains("marker grammar"))
+    // a marker in the grammar whose batch has no data dir fails the read
+    // by name, never skipped
+    val ghost = java.nio.file.Paths.get(root, "_commits", "00000009.ghost")
+    java.nio.file.Files.createFile(ghost)
+    val missing = intercept[IllegalStateException](wh.shifts)
+    assert(missing.getMessage.contains("'00000009.ghost'"))
+    assert(intercept[IllegalStateException](wh.kpis).getMessage.contains("'00000009.ghost'"))
+    java.nio.file.Files.delete(ghost)
+    assert(wh.shifts.count() === 2)
     java.nio.file.Files.createFile(java.nio.file.Paths.get(root, "_commits", "nightly"))
     val bad = intercept[IllegalStateException](wh.shifts)
     assert(bad.getMessage.contains("'nightly'"))
+  }
+
+  test("the four tables read back as projections typed like tableSchemas, before and after compact") {
+    val wh = new ShiftWarehouse(spark, tempDir("wh-views"))
+    val page = PageSource.parsePage(spark, ShiftFixtures.singlePage)
+    wh.appendBatch(ShiftNormalizer.normalize(page), "b0")
+    val expected = ShiftNormalizer.normalize(page)
+    def same(when: String): Unit = ShiftWarehouse.pkColumns.keys.foreach { name =>
+      val got = wh.table(name)
+      assert(got.schema === ShiftWarehouse.tableSchemas(name), s"$name $when")
+      assert(got.collect().map(_.toString).sorted.toSeq ===
+        expected.table(name).collect().map(_.toString).sorted.toSeq, s"$name $when")
+    }
+    same("after commit")
+    // KPI rows fold into their own compacted batch, next to the nested one
+    wh.appendKpis(ShiftKpis.all(wh.normalized, LocalDate.parse("2023-12-31")), "k0")
+    val kpis = wh.kpis.collect().map(_.toString).sorted.toSeq
+    val cid = wh.compact()
+    same("after compact")
+    assert(wh.committedBatches === Seq(cid, s"$cid-kpis"))
+    assert(wh.kpis.collect().map(_.toString).sorted.toSeq === kpis)
   }
 
   test("duplicate PK within a batch rolls back the whole batch (tests:242-300)") {
@@ -66,37 +96,40 @@ class ShiftWarehouseSpec extends SparkTestBase {
     assert(rejected(page(noShiftId, ShiftFixtures.shiftB), "b0") ==
       "null value in column \"shift_id\" of relation \"shifts\" violates not-null constraint (batch b0)")
     // two NULL keys are a not-null violation too, not a duplicate of null
-    def noBreakId(shift: String, id: String) = shift.replace("\"id\": \"" + id + "\",", "")
+    def noId(shift: String, id: String) = shift.replace("\"id\": \"" + id + "\",", "")
     assert(rejected(page(
-      noBreakId(ShiftFixtures.shiftA, "16419f82-8b9d-4434-a465-e150bd9c66b3"),
-      noBreakId(ShiftFixtures.shiftB, "6142ea7d-17be-4111-9a2a-73ed562b0f79")), "b1") ==
+      noId(ShiftFixtures.shiftA, "16419f82-8b9d-4434-a465-e150bd9c66b3"),
+      noId(ShiftFixtures.shiftB, "6142ea7d-17be-4111-9a2a-73ed562b0f79")), "b1") ==
       "null value in column \"break_id\" of relation \"breaks\" violates not-null constraint (batch b1)")
+    assert(rejected(page(
+      noId(ShiftFixtures.shiftA, "b38a088c-a65e-4389-b74d-0fb132e70629"), ShiftFixtures.shiftB), "b2") ==
+      "null value in column \"allowance_id\" of relation \"allowances\" violates not-null constraint (batch b2)")
+    assert(rejected(page(
+      ShiftFixtures.shiftA, noId(ShiftFixtures.shiftB, "60e7a113-ec1b-4ca1-b91e-1d4c1ff49b78")), "b3") ==
+      "null value in column \"award_id\" of relation \"award_interpretations\" violates not-null constraint (batch b3)")
   }
 
-  test("a page commit runs at most 5 Spark jobs; zero-row tables still validate") {
+  test("a warm page commit runs exactly 1 Spark job; zero-row tables still validate") {
     val wh = new ShiftWarehouse(spark, tempDir("wh-jobs"))
     val gen = ShiftGenerator.generate(11L, LocalDate.parse("2024-01-01"), days = 14)
-    def commit(json: String, id: String): Unit = {
-      // the caller's cache, as ShiftsEtl.run holds it
-      val page = PageSource.parsePage(spark, json).persist()
-      try wh.appendBatch(ShiftNormalizer.normalize(page), id) finally page.unpersist()
-    }
+    def commit(json: String, id: String): Unit =
+      wh.appendBatch(ShiftNormalizer.normalize(PageSource.parsePage(spark, json)), id)
     commit(ShiftGenerator.pageJson(gen, 0, 7), "p0")
     val jobs = jobsOf(commit(ShiftGenerator.pageJson(gen, 7, 7), "p1"))
-    assert(jobs <= 5, s"second page commit ran $jobs jobs")
+    assert(jobs == 1, s"second page commit ran $jobs jobs")
     assert(wh.shifts.count() == 14)
 
-    // shifts with no breaks, allowances or awards: three zero-row writes
-    // whose observations must still arrive
+    // shifts with no breaks, allowances or awards: three empty child
+    // tables whose keys the one observation must still carry
     val bare = ShiftGenerator.generate(12L, LocalDate.parse("2024-02-01"), days = 3)
       .map(_.copy(breaks = Nil, allowances = Nil, award_interpretations = Nil))
     val breaks = wh.breaks.count()
-    commit(ShiftGenerator.pageJson(bare, 0, 3), "p2")
+    assert(jobsOf(commit(ShiftGenerator.pageJson(bare, 0, 3), "p2")) == 1)
     assert(wh.shifts.count() == 17 && wh.breaks.count() == breaks)
     intercept[IllegalStateException](commit(ShiftGenerator.pageJson(bare, 0, 3), "p3"))
   }
 
-  test("compaction collapses the batch history to one dir per table, same rows") {
+  test("compaction collapses the batch history to one nested dir, same rows") {
     def ls(parts: String*): Seq[String] = {
       val s = java.nio.file.Files.list(java.nio.file.Paths.get(parts.head, parts.tail: _*))
       try s.toArray.map(_.toString).toSeq finally s.close()
@@ -118,8 +151,8 @@ class ShiftWarehouseSpec extends SparkTestBase {
     assert(wh.shifts.count() === before, "current reads unchanged")
     assert(wh.breaks.count() === breaks)
     assert(wh.committedBatches === Seq(cid), "history rewritten to one batch")
-    assert(ls(root, "shifts").size === 1, "one batch dir expected")
-    assert(ls(root, "shifts", s"batch=$cid").count(_.endsWith(".parquet")) === 1,
+    assert(ls(root, "nested").size === 1, "one batch dir expected")
+    assert(ls(root, "nested", s"batch=$cid").count(_.endsWith(".parquet")) === 1,
       "coalesced to one data file")
 
     // the warehouse keeps working after compaction: appends sequence on
@@ -133,7 +166,7 @@ class ShiftWarehouseSpec extends SparkTestBase {
     assert(cid2 !== cid)
     assert(wh.shifts.count() === 8, "re-compaction preserves all rows")
     assert(wh.committedBatches === Seq(cid2))
-    assert(ls(root, "shifts").size === 1)
+    assert(ls(root, "nested").size === 1)
     wh.appendBatch(page(4), "b4")
     assert(wh.shifts.count() === 10)
   }
