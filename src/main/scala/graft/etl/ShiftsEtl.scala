@@ -3,6 +3,7 @@ package graft.etl
 import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, from_json}
 
 /** The reference's `/run-etl` pipeline as a library call
   * (`etl/app/main.py:31-53` + `process_all_pages`,
@@ -114,17 +115,23 @@ object PageSource {
     }
 
   /** Parse one JSON page payload (the reference's `response.json()`) into a
-    * typed page DataFrame with the declared schema — never inferred. */
+    * typed page DataFrame with the declared schema — never inferred. Lazy:
+    * no query runs here, so the page is parsed inside the plan that
+    * consumes it (its commit's write job). A malformed payload gives one
+    * row of NULLs, as a PERMISSIVE JSON read does. */
   def parsePage(spark: SparkSession, json: String): DataFrame = {
     import spark.implicits._
-    spark.read.schema(ShiftSchemas.pageSchema).json(Seq(json).toDS())
+    Seq(json).toDF("v").select(from_json(col("v"), ShiftSchemas.pageSchema).as("p")).select("p.*")
   }
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** Production fetch implementation for [[pages]]: HTTP GET + typed parse
     * (the reference's `fetch_data`, shift_data_processor.py:32-43). Non-2xx
     * and IO errors throw — [[pages]] wraps them in [[FetchFailedException]],
-    * the reference's fetch-failure → clean-400 path. The next-link is read
-    * from the parsed page itself (`links.next`), like `get_next_url`. */
+    * the reference's fetch-failure → clean-400 path, and so does a body
+    * that is not JSON. The next-link is read from the body's `links.next`,
+    * like `get_next_url`, on the driver: no Spark job per fetch. */
   def httpFetcher(spark: SparkSession, timeoutMs: Int = 10000): String => (DataFrame, Option[String]) =
     url => {
       val conn = java.net.URI.create(url).toURL
@@ -138,9 +145,8 @@ object PageSource {
       val body =
         try new String(conn.getInputStream.readAllBytes(), "UTF-8")
         finally conn.disconnect()
-      val df = parsePage(spark, body)
-      val next = Option(df.selectExpr("links.next").head())
-        .flatMap(r => Option(r.getString(0)))
-      (df, next)
+      val next = Some(mapper.readTree(body).path("links").path("next"))
+        .filter(n => n.isValueNode && !n.isNull).map(_.asText)
+      (parsePage(spark, body), next)
     }
 }

@@ -52,16 +52,22 @@ class EtlRobustnessSpec extends SparkTestBase {
     serve("/page1", 200, p1)
     serve("/page2", 200, ShiftFixtures.page2)
     serve("/boom", 500, "")
+    serve("/garbled", 200, ShiftFixtures.page2.take(40))
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
       val fetch = PageSource.httpFetcher(spark)
-      val pages = PageSource.pages(s"$base/page1")(fetch).toList
+      var pages = List.empty[org.apache.spark.sql.DataFrame]
+      assert(jobsOf { pages = PageSource.pages(s"$base/page1")(fetch).toList } == 0,
+        "a fetch reads links.next without a Spark job")
       assert(pages.size == 2)
       assert(pages.map(_.selectExpr("size(results)").head().getInt(0)) == List(1, 1))
       val e = intercept[PageSource.FetchFailedException](
         PageSource.pages(s"$base/boom")(fetch).next())
       assert(e.getCause.getMessage.contains("HTTP 500"))
+      val g = intercept[PageSource.FetchFailedException](
+        PageSource.pages(s"$base/garbled")(fetch).next())
+      assert(g.getCause.isInstanceOf[com.fasterxml.jackson.core.JsonProcessingException])
     } finally server.stop(0)
   }
 

@@ -2,9 +2,14 @@ package graft.etl
 
 import java.time.LocalDate
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+
 import graft.SparkTestBase
 
-class ShiftKpisSpec extends SparkTestBase {
+class ShiftKpisSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private def kpiMap(tables: NormalizedShifts, asOf: LocalDate): Map[String, Option[BigDecimal]] =
     ShiftKpis.all(tables, asOf).collect()
@@ -69,5 +74,27 @@ class ShiftKpisSpec extends SparkTestBase {
     val t = ShiftNormalizer.normalize(PageSource.parsePage(spark, json))
     val k = kpiMap(t, LocalDate.parse("2023-12-31"))
     assert(k("max_break_free_shift_period_in_days") === Some(BigDecimal("2.00")))
+  }
+
+  test("the KPIs read the committed rows in two scans, with no join, explode or broadcast") {
+    val wh = new ShiftWarehouse(spark, tempDir("kpi-plan"))
+    val gen = ShiftGenerator.generate(5L, LocalDate.parse("2024-03-01"), days = 16)
+    (0 until 8).foreach { i =>
+      wh.appendBatch(ShiftNormalizer.normalize(
+        PageSource.parsePage(spark, ShiftGenerator.pageJson(gen, 2 * i, 2))), s"p$i")
+    }
+    val asOf = LocalDate.parse("2024-03-10")
+    val kpis = ShiftKpis.all(wh.normalized, asOf)
+    kpis.collect()
+    val plan = kpis.queryExecution.executedPlan
+    // at least one: the helper sees through the AQE wrapper and its stages
+    val scans = collect(plan) { case s: FileSourceScanExec => s }
+    assert(scans.nonEmpty && scans.size <= 2, plan.toString)
+    assert(collect(plan) {
+      case p @ (_: BroadcastExchangeExec | _: BroadcastHashJoinExec |
+          _: SortMergeJoinExec | _: GenerateExec) => p
+    }.isEmpty, plan.toString)
+    val jobs = jobsOf(wh.appendKpis(ShiftKpis.all(wh.normalized, asOf), "k0"))
+    assert(jobs <= 4, s"$jobs jobs")
   }
 }
